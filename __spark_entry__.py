@@ -47,25 +47,7 @@ def _register(spark: SparkSession, sf_dir: str) -> None:
 def _sql(statement: str):
     def run(spark: SparkSession, sf_dir: str) -> DataFrame:
         _register(spark, sf_dir)
-        stmt = statement
-        if "/*+ REBALANCE */" in stmt:
-            # The REBALANCE hint spreads the compact documents scan
-            # before the row-cost-bound shingle/token fan-out — but
-            # AQE's BYTE-based coalescing folds the ~2 MB table back to
-            # ONE partition, serializing the whole md5/aggregate stage
-            # on a single core (measured: simhash 1.9 s → 1.2 s after
-            # the fix at sf0.1/local[32]). An explicit user count is
-            # exempt from AQE coalescing; derive it from the session
-            # (cores locally, shuffle.partitions on a sized cluster) —
-            # never a constant.
-            n = max(
-                spark.sparkContext.defaultParallelism,
-                int(spark.conf.get("spark.sql.shuffle.partitions", "200")),
-            )
-            stmt = stmt.replace(
-                "/*+ REBALANCE */", f"/*+ REPARTITION({n}) */"
-            )
-        return spark.sql(stmt)
+        return spark.sql(statement)
 
     return run
 
@@ -1115,21 +1097,17 @@ GROUP BY user_id, session_id
 
 # evaluation metrics (core/evaluation/CharacterErrorRate.scala:5-15,
 # BagOfWords.scala:9-28, TextEvaluationMetric.scala:9-13): pair each doc
-# with its successor as pred/gold and compute CER + bag-of-words cosine
-# Spark side restructured for execution shape ONLY (the DuckDB twin
-# keeps the original construction; strict float-repr parity verified at
-# sf0.01/sf0.1):
-# * cos: the original joins vec back to toks and sums dot_part over the
-#   JOINED rows — a shared token matches both its 'p' and 'g' toks row,
-#   so each dot product is counted twice. 2*sum(pc*gc) is the same
-#   number EXACTLY (all terms are BIGINT counts — integer math, no
-#   float-order sensitivity), with one aggregation instead of
-#   agg + self-join + agg: the whole toks subtree is evaluated once,
-#   not twice, and two Exchanges + a SortMergeJoin disappear.
-# * lev: levenshtein is O(|pred|·|gold|) per row and ran in the
-#   post-join projection, which AQE coalesces to ONE partition at this
-#   size — the REBALANCE marker (rewritten to an AQE-exempt
-#   REPARTITION(n) by _sql) spreads it across the session's cores.
+# with its successor as pred/gold and compute CER + bag-of-words cosine.
+# bow_cosine is the textbook dot(p, g) / (|p| · |g|) over token counts.
+# Spark side restructured for execution shape ONLY (strict float-repr
+# parity with the DuckDB twin):
+# * cos: the DuckDB twin takes the dot product and the norms in
+#   separate aggregates; here one aggregation over vec gives all three
+#   (all terms are BIGINT counts — integer math, no float-order
+#   sensitivity), so the toks subtree is evaluated once, not twice.
+# * lev: levenshtein is O(|pred|·|gold|) per row; the REBALANCE hint
+#   spreads the pairs over the session's cores before it runs (AQE
+#   keeps them spread: see get_spark's minPartitionSize).
 _Q_EVAL_SPARK = """
 WITH pairs AS (
   SELECT a.doc_id AS doc_id, a.text AS pred, b.text AS gold
@@ -1153,7 +1131,7 @@ vec AS (
 ),
 cos AS (
   SELECT doc_id,
-         (2 * sum(pc * gc)) /
+         sum(pc * gc) /
          (sqrt(sum(pc * pc)) * sqrt(sum(gc * gc))) AS cosine
   FROM vec GROUP BY doc_id
 ),
@@ -1191,13 +1169,16 @@ vec AS (
          token
   FROM toks GROUP BY doc_id, token
 ),
+dots AS (
+  SELECT doc_id, sum(dot_part) AS dot FROM vec GROUP BY doc_id
+),
 cos AS (
-  SELECT v.doc_id,
-         sum(v.dot_part) /
+  SELECT d.doc_id,
+         d.dot /
          (sqrt(sum(CASE WHEN t.side='p' THEN t.c*t.c ELSE 0 END)) *
           sqrt(sum(CASE WHEN t.side='g' THEN t.c*t.c ELSE 0 END))) AS cosine
-  FROM vec v JOIN toks t ON v.doc_id = t.doc_id AND v.token = t.token
-  GROUP BY v.doc_id
+  FROM dots d JOIN toks t ON d.doc_id = t.doc_id
+  GROUP BY d.doc_id, d.dot
 )
 SELECT p.doc_id,
        round(levenshtein(p.pred, p.gold) / length(p.gold), 4) AS cer,

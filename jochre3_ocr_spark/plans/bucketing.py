@@ -13,6 +13,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
+from jochre3_ocr_spark.plans.pipeline import plan_nodes
+
 
 def write_bucketed(
     df: DataFrame,
@@ -35,8 +37,13 @@ def write_bucketed(
 def bucketed_join_is_shuffle_free(
     spark: SparkSession, left_table: str, right_table: str, key: str = "doc_id"
 ) -> bool:
-    """True when the join plan contains no Exchange on either side —
-    the observable guarantee bucketing buys."""
-    joined = spark.table(left_table).join(spark.table(right_table), key)
-    plan = joined._jdf.queryExecution().executedPlan().toString()
-    return "Exchange" not in plan
+    """True when a sort-merge join of the two tables on ``key`` plans no
+    shuffle on either side — the observable guarantee bucketing buys.
+    The merge hint keeps a broadcast from masking the answer. Reads
+    AQE's current physical plan, where a shuffle is an ``Exchange``
+    node."""
+    joined = spark.table(left_table).hint("merge").join(
+        spark.table(right_table), key
+    )
+    plan = joined._jdf.queryExecution().executedPlan().executedPlan()
+    return all(n.nodeName() != "Exchange" for n in plan_nodes(plan))

@@ -33,7 +33,7 @@ import hashlib
 import json
 import os
 import re
-from typing import Iterator
+from typing import Iterator, NamedTuple
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, functions as F
@@ -93,6 +93,15 @@ def get_spark(
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
+        # kernels downstream of a shuffle cost per ROW, not per byte.
+        # AQE's parallelism-first coalescing sizes post-shuffle
+        # partitions at shuffle bytes / slots, but never below this
+        # floor; at the 1m default a compact table (a REBALANCE of a
+        # sub-MB documents scan) folds into ONE partition and its
+        # row-cost-bound stage runs on one core. A 4 KB floor spreads
+        # any shuffle of more than slots × 4 KB over every slot, while
+        # a few-row aggregate still coalesces to one partition.
+        .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "4k")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "256")
         .config("spark.sql.parquet.filterPushdown", "true")
@@ -104,7 +113,7 @@ def get_spark(
         # task-granular atomic commits (v2): a killed job leaves only
         # fully-committed task files, which the resume anti-join then
         # skips — v1's job-level commit can resurrect a dead attempt's
-        # staging files as duplicates (found by the kill-resume test)
+        # staging files as duplicates
         .config(
             "spark.hadoop.mapreduce.fileoutputcommitter.algorithm.version", "2"
         )
@@ -427,16 +436,16 @@ def extract_with_salting(
     lexicon_bc = spark.sparkContext.broadcast(list(lexicon_words))
     pruned = _prune_to_json(docs)
     # The two-branch split re-executes the input subtree once per
-    # branch. For a bare parquet scan that is the RIGHT trade (column-
-    # pruned compressed rescan beats materializing — measured ~40%
-    # faster at sf0.1, round 5); for a DERIVED input (Python corpus
-    # generator, a bridge with joins) the re-execution repeats real
-    # work, so materialize it once instead (lazy local checkpoint: the
-    # first branch's action computes it, the second reads it back).
+    # branch. For a narrow scan that is the RIGHT trade (column-pruned
+    # compressed rescan beats materializing — measured ~40% faster at
+    # sf0.1); for a DERIVED input (Python corpus generator, a bridge
+    # with joins) the re-execution repeats real work, so materialize it
+    # once instead (lazy local checkpoint: the first branch's action
+    # computes it, the second reads it back).
     if (
         not all_giant
         and not pruned.isStreaming  # localCheckpoint is batch-only
-        and not _rescans_cheaply(pruned)
+        and not _plan_facts(pruned).narrow
     ):
         pruned = pruned.localCheckpoint(eager=False)
 
@@ -552,57 +561,74 @@ def extract_text_df(
     return _finalize(raw) if materialize_spans else raw
 
 
-def _rescans_cheaply(df: DataFrame) -> bool:
-    """True when re-executing ``df``'s plan is essentially a columnar
-    file rescan: no Python stage, shuffle, join, aggregate or window
-    upstream. Consumers with multiple branches over the same input use
-    this to choose between re-scanning (cheap for parquet — the
-    round-5 measurement) and materializing once (right for derived
-    inputs). Conservative on any introspection failure: re-scan, the
-    long-proven shape. A localCheckpoint'ed input shows as a bare RDD
-    scan — correctly 'cheap'."""
-    try:
-        plan = df._jdf.queryExecution().optimizedPlan().toString()
-    except Exception:  # noqa: BLE001 — introspection only
-        return True
-    markers = (
-        "MapInPandas",
-        "ArrowEvalPython",
-        "BatchEvalPython",
-        "PythonMapInArrow",
-        "FlatMapGroupsInPandas",
-        "Join",
-        "Aggregate",
-        "Repartition",
-        "Sort",
-        "Window",
-        "Union",
-        "Generate",
+#: logical nodes whose subtree re-executes as a plain scan: building its
+#: RDD schedules no job, and rescanning it repeats no real work
+_NARROW_NODES = frozenset(
+    (
+        "LogicalRelation",
+        "LogicalRDD",
+        "LocalRelation",
+        "Range",
+        "DataSourceV2ScanRelation",  # an Iceberg catalog table
+        "Project",
+        "Filter",
     )
-    return not any(m in plan for m in markers)
-
-
-#: logical-plan markers whose presence means the frame's partitioning is
-#: produced by a stage boundary (shuffle/Python/AQE-sized), not by the
-#: file scan — ``df.rdd`` on such a frame EXECUTES the upstream stages
-#: under AQE (AdaptiveSparkPlanExec materializes every shuffle stage at
-#: RDD-construction time), so the partition-count probe below must never
-#: touch it.
-_WIDE_PLAN_MARKERS = (
-    "Repartition",
-    "Rebalance",  # RebalancePartitions — AQE-coalescible, probe-unsafe
-    "Aggregate",
-    "Join",
-    "Window",
-    "Sort",
-    "InPandas",  # MapInPandas, FlatMap(Co)GroupsInPandas, …
-    "InArrow",
-    "EvalPython",
-    "Generate",
-    "Union",
-    "GlobalLimit",
-    "Offset",
 )
+
+
+class _PlanFacts(NamedTuple):
+    #: every node of the optimized plan is in _NARROW_NODES or caches
+    #: a shuffle-free plan
+    narrow: bool
+    #: the topmost partitioning node reached from the root through
+    #: Project/Filter only: ("shuffle" | "coalesce" | "keyed", count)
+    #: with count None for a keyed repartition without one; else None
+    partitioning: tuple[str, int | None] | None
+    #: Catalyst's sizeInBytes estimate
+    size: int
+
+
+def plan_nodes(plan):
+    """Every node of a Catalyst plan tree (a py4j handle), root first."""
+    stack = [plan]
+    while stack:
+        node = stack.pop()
+        yield node
+        kids = node.children()
+        stack.extend(kids.apply(i) for i in range(kids.size()))
+
+
+def _is_narrow_node(node) -> bool:
+    if node.nodeName() == "InMemoryRelation":
+        # a cache is as narrow as the physical plan it caches; AQE wraps
+        # every plan that needs a shuffle, so a cached aggregate shows
+        # as one opaque AdaptiveSparkPlan node
+        return all(
+            n.nodeName() not in ("AdaptiveSparkPlan", "Exchange")
+            for n in plan_nodes(node.cachedPlan())
+        )
+    return node.nodeName() in _NARROW_NODES
+
+
+def _plan_facts(df: DataFrame) -> _PlanFacts:
+    """What the spread and rescan decisions need from ``df``'s
+    optimized logical plan, read from node classes (``nodeName``) and
+    Catalyst's own estimate — never from the rendered plan text."""
+    plan = df._jdf.queryExecution().optimizedPlan()
+    narrow = all(_is_narrow_node(n) for n in plan_nodes(plan))
+    top = plan
+    while top.nodeName() in ("Project", "Filter"):
+        top = top.children().apply(0)
+    if top.nodeName() == "Repartition":
+        kind = "shuffle" if top.shuffle() else "coalesce"
+        partitioning = (kind, top.numPartitions())
+    elif top.nodeName() == "RepartitionByExpression":
+        n = top.optNumPartitions()
+        partitioning = ("keyed", n.get() if n.isDefined() else None)
+    else:
+        partitioning = None
+    # py4j hands scala BigInt back as a Python int of any size
+    return _PlanFacts(narrow, partitioning, int(plan.stats().sizeInBytes()))
 
 
 def _spread_small_input(df: DataFrame) -> DataFrame:
@@ -615,88 +641,39 @@ def _spread_small_input(df: DataFrame) -> DataFrame:
     input has ≫ cores splits and this is a no-op (no Exchange added —
     the narrow-plan guarantee holds exactly when it matters).
 
-    Probe discipline (round 6): ``df.rdd.getNumPartitions()`` is only
-    safe on a scan/narrow subtree — under AQE, constructing the RDD of
-    a frame with an upstream shuffle EXECUTES that shuffle's map
-    stages at query-CONSTRUCTION time (measured: one full job per
-    probe; at corpus scale that is a double execution of the whole
-    upstream aggregation). For derived inputs the decision therefore
-    comes from the plan alone:
+    ``df.rdd.getNumPartitions()`` is only safe on a narrow (scan,
+    Project, Filter) plan: under AQE, building the RDD of a frame with
+    an upstream shuffle EXECUTES that shuffle's map stages at query
+    construction time — one full job per probe. Any other plan is
+    decided from its nodes alone:
 
-    * the only wide node is an explicit ``Repartition(n >= slots)``
-      (an upstream caller already spread this subtree, only narrow
-      ops above it) → no-op;
-    * otherwise use Catalyst's free ``sizeInBytes`` estimate — AQE's
-      byte-based coalescing can pin a frame below ``slots`` partitions
-      ONLY when it is byte-small, so a frame estimated ≫
-      slots × advisory-partition-size keeps its natural width and
-      needs no spread, while a small estimate gets the explicit
-      repartition (user counts are AQE-exempt; the shuffle is
-      metadata-sized by the same estimate).
+    * topmost partitioning is a keyed repartition (the caller's
+      co-partitioning; a round-robin on top would destroy it) or a
+      shuffle repartition to ``n >= slots`` → no-op;
+    * topmost partitioning is a coalesce to ``n < slots`` → spread,
+      whatever the size: the coalesce pins every row to ``n`` cores;
+    * otherwise Catalyst's free ``sizeInBytes`` estimate decides — AQE
+      can pin a frame below ``slots`` partitions only when it is
+      byte-small, so a frame estimated past slots × 64 MB (the
+      advisory partition size) keeps its width, while a smaller one
+      gets the explicit repartition (user counts are AQE-exempt).
 
     Streaming frames pass through untouched: ``df.rdd`` is illegal on
-    a streaming DataFrame, and the spread is a batch-scan concern
-    (round-6 self-review — operators like pq_encode/_windows that
-    spread their input stay composable under readStream)."""
+    them, and the spread is a batch-scan concern."""
     if df.isStreaming:
         return df
-    spark = df.sparkSession
-    slots = spark.sparkContext.defaultParallelism
-    try:
-        plan = df._jdf.queryExecution().optimizedPlan()
-        plan_str = plan.toString()
-    except Exception:  # noqa: BLE001 — introspection only
-        plan_str = None
-    if plan_str is None or not any(
-        m in plan_str for m in _WIDE_PLAN_MARKERS
-    ):
-        # scan/narrow subtree: RDD construction schedules nothing
-        if df.rdd.getNumPartitions() < slots:
-            return df.repartition(slots)
-        return df
-    import re
-
-    # Already-spread check (two review rounds hardened it): a shuffle
-    # repartition prints `Repartition n, true`, a keyed one
-    # `RepartitionByExpression [cols], n` — both spread to n
-    # partitions (and a keyed one must NOT get a round-robin stacked
-    # on top, which would destroy the caller's co-partitioning). A
-    # coalesce prints `Repartition n, false`, only REDUCES partitions,
-    # and pins the frame regardless of what sits below it — its
-    # presence anywhere disqualifies the skip (the size path below
-    # then decides: byte-small frames get the explicit spread, undoing
-    # the pin).
-    counts = [
-        int(n) for n in re.findall(r"Repartition (\d+), true", plan_str)
-    ] + [
-        int(n)
-        for n in re.findall(
-            r"RepartitionByExpression \[[^\]]*\], (\d+)", plan_str
-        )
-    ]
-    has_coalesce = re.search(r"Repartition \d+, false", plan_str)
-    only_repartition = not any(
-        m in plan_str for m in _WIDE_PLAN_MARKERS if m != "Repartition"
-    )
-    if (
-        only_repartition
-        and counts
-        and max(counts) >= slots
-        and not has_coalesce
-    ):
-        return df
-    try:
-        raw = plan.stats().sizeInBytes()
-        # py4j converts scala.math.BigInt to a Python int when it
-        # fits; larger values come back as a JavaObject
-        size = raw if isinstance(raw, int) else int(raw.toString())
-    except Exception:  # noqa: BLE001 — stats estimate only
-        return df  # can't see: leave the frame alone (perf-neutral)
-    # 64 MB is AQE's default advisory partition size; anything
-    # estimated past slots× that keeps >= slots partitions on its own
-    if size > slots * (64 << 20):
-        return df
-    return df.repartition(slots)
+    slots = df.sparkSession.sparkContext.defaultParallelism
+    facts = _plan_facts(df)
+    kind, n = facts.partitioning or (None, None)
+    if facts.narrow:
+        pinned = df.rdd.getNumPartitions() < slots
+    elif kind == "keyed" or (kind == "shuffle" and n >= slots):
+        pinned = False
+    elif kind == "coalesce" and n < slots:
+        pinned = True
+    else:
+        pinned = facts.size <= slots * (64 << 20)
+    return df.repartition(slots) if pinned else df
 
 
 # ------------------------------------------------------- vision-path OCR

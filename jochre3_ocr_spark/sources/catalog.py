@@ -18,6 +18,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
+from jochre3_ocr_spark.plans.bucketing import bucketed_join_is_shuffle_free
+
 ICEBERG_CATALOG = "graft"
 
 
@@ -114,11 +116,5 @@ def read_docs(spark: SparkSession, table: str) -> DataFrame:
 
 def cogrouped_join_is_shuffle_free(spark: SparkSession, table: str) -> bool:
     """Diagnostic: joining the bucketed table to itself on doc_id must
-    not add an Exchange on the bucketed side (the co-location payoff).
-    Returns True when the physical plan has no shuffle below the join."""
-    df = spark.table(table)
-    # force a sort-merge join so a broadcast exchange can't mask the
-    # result; the bucketed scan must satisfy the join's distribution
-    joined = df.alias("a").hint("merge").join(df.alias("b"), "doc_id")
-    plan = joined._jdf.queryExecution().executedPlan().toString()
-    return "Exchange hashpartitioning" not in plan
+    not add an Exchange on the bucketed side (the co-location payoff)."""
+    return bucketed_join_is_shuffle_free(spark, table, table)

@@ -93,3 +93,31 @@ def test_rows_only_queries(spark):
     for name in only_rows:
         df = entry_mod.queries()[name](spark, SF_DIR)
         assert df.count() > 0, name
+
+
+def test_eval_bow_cosine_is_textbook_cosine(spark):
+    """bow_cosine is dot(p, g) / (|p| · |g|) over the token counts of
+    each (pred, gold) pair — checked on a few rows against Python."""
+    from collections import Counter
+
+    import pyarrow.parquet as pq
+
+    docs = pq.read_table(
+        f"{SF_DIR}/documents.parquet", columns=["doc_id", "text"]
+    ).to_pydict()
+    text = dict(zip(docs["doc_id"], docs["text"]))
+    got = (
+        entry_mod.queries()["eval_text_metrics"](spark, SF_DIR)
+        .orderBy("doc_id")
+        .limit(8)
+        .collect()
+    )
+    assert len(got) == 8
+    for row in got:
+        p = Counter(t for t in text[row.doc_id].split(" ") if t)
+        g = Counter(t for t in text[row.doc_id + 1].split(" ") if t)
+        dot = sum(c * g[t] for t, c in p.items())
+        norms = math.sqrt(sum(c * c for c in p.values())) * math.sqrt(
+            sum(c * c for c in g.values())
+        )
+        assert abs(row.bow_cosine - dot / norms) <= 5.1e-5, row

@@ -276,7 +276,7 @@ def test_run_job_raises_on_incompatible_output_not_reprocess(spark, tmp_path):
         run_job(spark, inp, out, lexicon_words(), metrics_path=None)
 
 
-def test_spread_small_input_probe_discipline(spark):
+def test_spread_small_input_probe_discipline(spark, docs_df, tmp_path):
     """_spread_small_input must (a) spread a compact scan, (b) be a
     no-op on a subtree an upstream caller already spread, and (c)
     decide for derived (wide-topped) frames WITHOUT scheduling a job —
@@ -344,3 +344,83 @@ def test_spread_small_input_probe_discipline(spark):
         .toString()
     )
     assert plan.count("Repartition") == 1
+
+    def decide(df):
+        before = len(tracker.getJobIdsForGroup(None) or [])
+        out = _spread_small_input(df)
+        after = len(tracker.getJobIdsForGroup(None) or [])
+        assert after == before, "spread decision scheduled a Spark job"
+        return out._jdf.queryExecution().optimizedPlan()
+
+    def spread_to_slots(plan):
+        return plan.nodeName() == "Repartition" and (
+            plan.numPartitions() == slots and plan.shuffle()
+        )
+
+    # (g) column names are not plan nodes: aliases "Sort"/"Join" over a
+    # one-split scan leave it narrow, so the probe sees one partition
+    # (its byte estimate alone would skip the spread)
+    aliased = spark.range(0, 10**10, 1, 1).select(
+        F.col("id").alias("Sort"), F.col("id").alias("Join")
+    )
+    assert spread_to_slots(decide(aliased))
+
+    # (h) the TOPMOST repartition decides: a small one above a qualifying
+    # one pins the frame (a non-deterministic filter keeps both)
+    stacked = (
+        small.repartition(64).filter(F.rand(1) < 0.9).repartition(2)
+    )
+    assert spread_to_slots(decide(stacked))
+
+    # (i) a keyed repartition without a count is already the caller's
+    # co-partitioning: no round-robin on top
+    assert (
+        decide(small.repartition(F.col("doc_id"))).nodeName()
+        == "RepartitionByExpression"
+    )
+
+    # (j) a coalesce below slots pins the frame whatever its byte size
+    coalesced = spark.range(0, 10**10, 1, 8).coalesce(1)
+    assert spread_to_slots(decide(coalesced))
+
+    # (k) an aliased bare parquet scan is narrow: extract_with_salting
+    # rescans it instead of materializing it (a LogicalRDD checkpoint)
+    path = str(tmp_path / "aliased.parquet")
+    docs_df.select(
+        F.col("doc_id").alias("Sort"), F.col("spans").alias("Join")
+    ).write.parquet(path)
+    docs = spark.read.parquet(path).select(
+        F.col("Sort").alias("doc_id"), F.col("Join").alias("spans")
+    )
+    before = len(tracker.getJobIdsForGroup(None) or [])
+    assert pipeline._plan_facts(pipeline._prune_to_json(docs)).narrow
+    assert len(tracker.getJobIdsForGroup(None) or []) == before
+    out = pipeline.extract_with_salting(docs, lexicon_words())
+    plan = out._jdf.queryExecution().optimizedPlan()
+    assert "LogicalRDD" not in {
+        n.nodeName() for n in pipeline.plan_nodes(plan)
+    }
+
+
+def test_aqe_spreads_rebalance_of_compact_table(spark, tmp_path):
+    """get_spark's coalescePartitions.minPartitionSize keeps AQE from
+    folding a REBALANCE of a compact (~250-row) parquet table into one
+    post-shuffle partition: the row-cost-bound stage after it gets
+    every slot."""
+    from pyspark.sql import functions as F
+
+    path = str(tmp_path / "compact.parquet")
+    spark.range(0, 250, 1, 1).withColumn(
+        "id_s", F.col("id").cast("string")
+    ).select(
+        F.col("id").alias("doc_id"),
+        # hash text: shuffle blocks are compressed, so the rows must not
+        # repeat (~26 KB of parquet)
+        F.concat_ws(" ", F.sha2("id_s", 256), F.md5("id_s")).alias("text"),
+    ).write.parquet(path)
+    spark.read.parquet(path).createOrReplaceTempView("compact_docs")
+    rebalanced = spark.sql("SELECT /*+ REBALANCE */ * FROM compact_docs")
+    assert (
+        rebalanced.rdd.getNumPartitions()
+        >= spark.sparkContext.defaultParallelism
+    )

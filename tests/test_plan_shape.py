@@ -437,3 +437,19 @@ def test_nb_predict_broadcasts_model_tables(spark):
     plan = _plan(nb_classify(docs, docs))
     assert plan.count("BroadcastHashJoin") >= 2
     assert "SortMergeJoin [w" not in plan
+
+
+def test_no_decision_reads_a_rendered_plan():
+    """Runtime decisions come from plan nodes, stats or AQE settings,
+    never from text matches on a rendered plan: no module of the
+    package and no code of __spark_entry__.py calls toString()."""
+    import pathlib
+
+    import __spark_entry__ as em
+    import jochre3_ocr_spark
+
+    files = [pathlib.Path(em.__file__)] + sorted(
+        pathlib.Path(jochre3_ocr_spark.__file__).parent.rglob("*.py")
+    )
+    offenders = [str(f) for f in files if "toString()" in f.read_text()]
+    assert not offenders
