@@ -4,12 +4,18 @@
 ``queries()`` exposes every implemented operator from SURVEY.md §2 plus
 the training-data-pipeline operators (dedup / similarity / text
 analysis); ``oracle_sql()`` gives the DuckDB-dialect equivalent for
-every SQL-expressible query (extraction queries over the synthesized
-Yiddish corpus are rows-only checks).
+every query.
 
-Column aliases are kept identical between the Spark SQL and the DuckDB
-SQL; double aggregates are rounded on both sides so value-hashes match
-despite float summation-order differences.
+One implementation per operator: an entry whose operator lives in
+``jochre3_ocr_spark`` calls that library function with the parameters
+the query pins, so its DuckDB oracle checks the code ``job.py`` runs.
+A new operator is a library function plus a ``*_DUCK`` oracle, never a
+Spark SQL copy. Spark SQL text (``_sql``) remains only for queries with
+no library operator (TPC-H, events, eval metrics, centroids).
+
+Column names and types are kept identical between each entry and its
+oracle; double aggregates are rounded on both sides so value-hashes
+match despite float summation-order differences.
 """
 
 from __future__ import annotations
@@ -52,6 +58,13 @@ def _sql(statement: str):
     return run
 
 
+def _table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """One of ``TABLES`` as a DataFrame: the registered view, so the
+    parquet schema is read once per (session, sf_dir), not on every call."""
+    _register(spark, sf_dir)
+    return spark.table(name)
+
+
 # --------------------------------------------------------------------------
 # Extraction-engine queries (the flagship): the full Jochre3-equivalent
 # pipeline over the documents table. For the clean [a-z ] driver corpus the
@@ -61,7 +74,7 @@ def _extract_processed_text(spark: SparkSession, sf_dir: str) -> DataFrame:
     from jochre3_ocr_spark.plans.pipeline import extract_text_df
     from jochre3_ocr_spark.sources.corpus import lexicon_words
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = _table(spark, sf_dir, "documents")
     out = extract_text_df(docs, lexicon_words())
     return out.selectExpr("doc_id", "processed_text")
 
@@ -70,7 +83,7 @@ def _extract_span_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     from jochre3_ocr_spark.plans.pipeline import extract_text_df
     from jochre3_ocr_spark.sources.corpus import lexicon_words
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = _table(spark, sf_dir, "documents")
     out = extract_text_df(docs, lexicon_words())
     return out.selectExpr("doc_id", "n_spans", "n_words")
 
@@ -92,7 +105,7 @@ _TO26 = (_YID_ALEPH * 2)[:26]
 def _yiddish_docs(spark: SparkSession, sf_dir: str):
     from pyspark.sql import functions as SF
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = _table(spark, sf_dir, "documents")
     # NO spread here: every consumer (extract_text_df, ocr_documents,
     # the giant branch's salt shuffle) spreads at its own Python stage,
     # and an outer Repartition makes each branch's construction-time
@@ -387,50 +400,30 @@ _Q_EVENTS_DUCK = _Q_EVENTS_SPARK.replace(
 # --------------------------------------------------------------------------
 # Training-data pipeline operators over documents / embeddings
 # --------------------------------------------------------------------------
-_Q_DEDUP_EXACT_SPARK = """
+def _dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from jochre3_ocr_spark.operators.dedup import exact_dedup
+
+    return exact_dedup(
+        _table(spark, sf_dir, "documents"), prefix=40
+    ).withColumnRenamed("text_hash", "prefix_hash")
+
+
+_Q_DEDUP_EXACT_DUCK = """
 SELECT prefix_hash,
        count(*)                      AS n_docs,
-       min(CAST(doc_id AS STRING))   AS keeper
+       min(CAST(doc_id AS VARCHAR))   AS keeper
 FROM (SELECT doc_id, md5(substr(text, 1, 40)) AS prefix_hash FROM documents) t
 GROUP BY prefix_hash
 HAVING count(*) >= 2
 """
-_Q_DEDUP_EXACT_DUCK = _Q_DEDUP_EXACT_SPARK.replace("AS STRING", "AS VARCHAR")
 
-_Q_NGRAM_JACCARD_SPARK = """
-WITH toks AS (
-  SELECT /*+ REBALANCE */ CAST(doc_id AS STRING) AS doc_id,
-         filter(split(text, ' '), x -> x <> '') AS t
-  FROM documents
-),
-sh AS (
-  SELECT doc_id, shingle
-  FROM toks
-  LATERAL VIEW explode(
-    array_distinct(
-      transform(sequence(0, size(t) - 3),
-                i -> concat_ws(' ', t[i], t[i+1], t[i+2]))
-    )
-  ) x AS shingle
-  WHERE size(t) >= 3
-),
-counts AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id),
--- doc-frequency cap: stop-phrase shingles are quadratic hot keys at scale
-rare AS (SELECT shingle FROM sh GROUP BY shingle HAVING count(*) <= 50),
-pairs AS (
-  SELECT a.doc_id AS doc1, b.doc_id AS doc2, count(*) AS common
-  FROM sh a
-  JOIN rare r ON a.shingle = r.shingle
-  JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-  GROUP BY a.doc_id, b.doc_id
-)
-SELECT p.doc1, p.doc2, p.common,
-       round(p.common / (ca.n + cb.n - p.common), 4) AS jaccard
-FROM pairs p
-JOIN counts ca ON p.doc1 = ca.doc_id
-JOIN counts cb ON p.doc2 = cb.doc_id
-WHERE p.common >= 3
-"""
+
+def _dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from jochre3_ocr_spark.operators.dedup import ngram_jaccard_pairs
+
+    return ngram_jaccard_pairs(_table(spark, sf_dir, "documents"), max_df=50)
+
+
 _Q_NGRAM_JACCARD_DUCK = """
 WITH toks AS (
   SELECT CAST(doc_id AS VARCHAR) AS doc_id,
@@ -464,41 +457,16 @@ JOIN counts cb ON p.doc2 = cb.doc_id
 WHERE p.common >= 3
 """
 
-_Q_MINHASH_SPARK = """
-WITH toks AS (
-  SELECT /*+ REBALANCE */ CAST(doc_id AS STRING) AS doc_id,
-         filter(split(text, ' '), x -> x <> '') AS t
-  FROM documents
-),
-sh AS (
-  SELECT doc_id, shingle
-  FROM toks
-  LATERAL VIEW explode(
-    array_distinct(
-      transform(sequence(0, size(t) - 3),
-                i -> concat_ws(' ', t[i], t[i+1], t[i+2]))
-    )
-  ) x AS shingle
-  WHERE size(t) >= 3
-),
--- wide single-aggregation form: one groupBy(doc_id) with 8 min buffers
--- instead of groupBy(doc_id, s) + groupBy(doc_id) — the map-side partial
--- agg collapses to one row per doc before the shuffle and an Exchange
--- disappears; per-seed md5 inputs and the seed-order concat are
--- bit-identical to the exploded construction the oracle replays
-mh AS (
-  SELECT doc_id,
-         min(md5('0:' || shingle)) AS m0, min(md5('1:' || shingle)) AS m1,
-         min(md5('2:' || shingle)) AS m2, min(md5('3:' || shingle)) AS m3,
-         min(md5('4:' || shingle)) AS m4, min(md5('5:' || shingle)) AS m5,
-         min(md5('6:' || shingle)) AS m6, min(md5('7:' || shingle)) AS m7
-  FROM sh
-  GROUP BY doc_id
-)
-SELECT doc_id,
-       md5(concat_ws(',', m0, m1, m2, m3, m4, m5, m6, m7)) AS signature
-FROM mh
-"""
+
+def _dedup_minhash_signature(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from jochre3_ocr_spark.operators.dedup import minhash_signatures
+
+    return minhash_signatures(_table(spark, sf_dir, "documents"))
+
+
+# The oracle explodes (doc, seed) rows and aggregates twice; the library
+# takes all 8 per-seed mins in one aggregation (dedup.minhash_signatures).
+# Same per-seed md5 strings, same seed-order concat: equal signatures.
 _Q_MINHASH_DUCK = """
 WITH toks AS (
   SELECT CAST(doc_id AS VARCHAR) AS doc_id,
@@ -526,117 +494,20 @@ GROUP BY doc_id
 
 # SimHash near-dup pairs (operators/dedup.simhash_neardup_pairs): the
 # production shape — 64-bit signature, 4×16-bit bands (pigeonhole:
-# hamming ≤ 1 ⇒ ≥3 identical bands; 65 536 buckets/band instead of the
-# old 4-bit banding's 16), bucket-join then bit_count(xor) verify, with
-# the same hot-bucket guard as _Q_LSH_* (cap 3: all pairs among a
-# bucket's first 3 docs; tail docs link to ALL 3 heads so the Hamming
-# verify gets 3 chances per tail doc, not 1). Band
-# values are aggregated straight from the per-bit votes — never by
-# shifting the signed 64-bit signature.
+# hamming ≤ 1 ⇒ ≥3 identical bands), bucket pairs then bit_count(xor)
+# verify, with the hot-bucket cap at 3 so it is exercised at sf0.001
+# (tail docs link to ALL 3 heads: 3 chances each at the Hamming
+# verify). The oracle aggregates per-(doc, bit) rows and replays the
+# cap as a heads self-join plus a heads × tails join; the library packs
+# 64 wide vote columns and fans capped pairs out of one window.
+def _dedup_simhash_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from jochre3_ocr_spark.operators.dedup import simhash_neardup_pairs
 
-def _simhash_vote_cols_sql(bits: int = 64) -> str:
-    """The per-bit vote aggregates, generated once and shared by BOTH
-    Spark simhash twins (the bit rule lives in exactly one place — a
-    single-digit typo in a hand-maintained 64-arm copy would silently
-    skew one bit of one twin; see operators/dedup._bit_condition for
-    the library form of the same rule)."""
-    lines = []
-    for b in range(bits):
-        digs = ("'8','9','a','b','c','d','e','f'" if b < 32
-                else "'4','5','6','7','c','d','e','f'")
-        lines.append(
-            f"    sum(CASE WHEN substr(md5(token), {b % 32 + 1}, 1) "
-            f"IN ({digs}) THEN 1 ELSE -1 END) AS v{b}"
-        )
-    return ",\n".join(lines)
+    return simhash_neardup_pairs(
+        _table(spark, sf_dir, "documents"), max_hamming=1, max_bucket=3
+    )
 
 
-def _simhash_sig_sql(bits: int = 64) -> str:
-    """Signed-BIGINT signature from the vote columns (bit 63 assembled
-    as -2^63, two's complement)."""
-    terms = []
-    for b in range(bits):
-        const = ("(CAST(-9223372036854775807 AS BIGINT) - 1)"
-                 if b == 63 else str(1 << b))
-        terms.append(
-            f"CASE WHEN v{b} >= 0 THEN {const} ELSE CAST(0 AS BIGINT) END"
-        )
-    return "CAST(" + "\n     + ".join(terms) + " AS BIGINT)"
-
-
-def _simhash_band_sql(k: int, band_bits: int = 16) -> str:
-    terms = [
-        f"CASE WHEN v{k * band_bits + j} >= 0 THEN {1 << j} ELSE 0 END"
-        for j in range(band_bits)
-    ]
-    return "CAST(" + " + ".join(terms) + " AS BIGINT)"
-
-
-_SIMHASH_VOTES_CTE = """WITH toks AS (
-  SELECT /*+ REBALANCE */ CAST(doc_id AS STRING) AS doc_id, token
-  FROM documents
-  LATERAL VIEW explode(array_distinct(filter(split(text, ' '), x -> x <> '')))
-    x AS token
-),
-votes AS (
-  SELECT doc_id,
-%s
-  FROM toks GROUP BY doc_id
-)""" % _simhash_vote_cols_sql()
-
-_Q_SIMHASH_ND_SPARK = _SIMHASH_VOTES_CTE + """,
-sigs AS (
-  SELECT doc_id,
-         %s AS simhash,
-         %s AS bv0,
-         %s AS bv1,
-         %s AS bv2,
-         %s AS bv3
-  FROM votes
-),
-bands AS (
-  SELECT doc_id, simhash,
-         stack(4, 0, bv0, 1, bv1, 2, bv2, 3, bv3) AS (band, band_val)
-  FROM sigs
-),
-ranked AS (
-  SELECT doc_id, band, band_val, simhash,
-         row_number() OVER (PARTITION BY band, band_val
-                            ORDER BY doc_id) AS rk
-  FROM bands
-),
--- single-pass capped pairs (the dedup._capped_bucket_pairs round-6
--- rewrite, SQL form): the cap bounds the head set, so the per-bucket
--- head list is a <=3 array attached to every row by a full-frame
--- window over the SAME partitioning (no new Exchange), and the pairs
--- fan out as an array expression — the old heads self-join +
--- heads x tails join evaluated the whole votes subtree four times.
--- Heads sort ascending by doc_id (unique per bucket), reproducing the
--- a.doc_id < b.doc_id join's orientation exactly; tail rows pair with
--- every head (the Hamming-verified tail_link_all_heads form).
-staged AS (
-  SELECT doc_id, simhash, rk,
-         sort_array(collect_list(CASE WHEN rk <= 3 THEN
-             named_struct('d', doc_id, 's', simhash) END)
-           OVER (PARTITION BY band, band_val)) AS heads
-  FROM ranked
-),
-cand AS (
-  SELECT DISTINCT p.doc1 AS doc1, p.doc2 AS doc2, p.s1 AS s1, p.s2 AS s2
-  FROM staged
-  LATERAL VIEW explode(
-    CASE WHEN rk <= 3 THEN
-      transform(slice(heads, rk + 1, 3), h -> named_struct(
-        'doc1', doc_id, 'doc2', h.d, 's1', simhash, 's2', h.s))
-    ELSE
-      transform(heads, h -> named_struct(
-        'doc1', h.d, 'doc2', doc_id, 's1', h.s, 's2', simhash))
-    END) x AS p
-)
-SELECT doc1, doc2, CAST(bit_count(s1 ^ s2) AS INT) AS hamming
-FROM cand WHERE bit_count(s1 ^ s2) <= 1
-""" % (_simhash_sig_sql(), _simhash_band_sql(0), _simhash_band_sql(1),
-       _simhash_band_sql(2), _simhash_band_sql(3))
 _Q_SIMHASH_ND_DUCK = """
 WITH toks AS (
   SELECT CAST(doc_id AS VARCHAR) AS doc_id,
@@ -700,75 +571,17 @@ FROM cand WHERE bit_count(xor(s1, s2)) <= 1
 # guard (max_bucket=3 here so the cap is exercised at driver SF): buckets
 # larger than the cap emit all pairs among their first 3 docs plus one
 # star-link pair per tail doc to the bucket minimum, bounding a bucket of
-# b docs at 3 + (b-3) pairs instead of b²/2 — a giant duplicate group can
-# no longer push b² rows through one band_hash shuffle key
-# (dedup._capped_bucket_pairs; components downstream are unchanged).
-_Q_LSH_SPARK = """
-WITH toks AS (
-  SELECT /*+ REBALANCE */ CAST(doc_id AS STRING) AS doc_id,
-         filter(split(text, ' '), x -> x <> '') AS t
-  FROM documents
-),
-sh AS (
-  SELECT doc_id, shingle
-  FROM toks
-  LATERAL VIEW explode(
-    array_distinct(
-      transform(sequence(0, size(t) - 3),
-                i -> concat_ws(' ', t[i], t[i+1], t[i+2]))
+# b docs at 3 + (b-3) pairs instead of b²/2 (dedup._capped_bucket_pairs;
+# components downstream are unchanged). The oracle replays the cap as
+# self-joins; the library fans the pairs out of one window.
+def _dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from jochre3_ocr_spark.operators.dedup import minhash_lsh_candidates
+
+    return minhash_lsh_candidates(
+        _table(spark, sf_dir, "documents"), max_bucket=3
     )
-  ) x AS shingle
-  WHERE size(t) >= 3
-),
--- wide single-aggregation banding (same rewrite as _Q_MINHASH_SPARK and
--- dedup._minhash_bands): one groupBy(doc_id) computes all 8 per-seed
--- mins, then the 4 band rows fan out through a zero-shuffle posexplode —
--- two Exchanges fewer, band hashes bit-identical (seed-order concat)
-mh AS (
-  SELECT doc_id,
-         min(md5('0:' || shingle)) AS m0, min(md5('1:' || shingle)) AS m1,
-         min(md5('2:' || shingle)) AS m2, min(md5('3:' || shingle)) AS m3,
-         min(md5('4:' || shingle)) AS m4, min(md5('5:' || shingle)) AS m5,
-         min(md5('6:' || shingle)) AS m6, min(md5('7:' || shingle)) AS m7
-  FROM sh
-  GROUP BY doc_id
-),
-bands AS (
-  SELECT doc_id, band, band_hash
-  FROM mh
-  LATERAL VIEW posexplode(array(
-    md5(concat_ws(',', m0, m1)), md5(concat_ws(',', m2, m3)),
-    md5(concat_ws(',', m4, m5)), md5(concat_ws(',', m6, m7))
-  )) x AS band, band_hash
-),
-ranked AS (
-  SELECT doc_id, band, band_hash,
-         row_number() OVER (PARTITION BY band, band_hash ORDER BY doc_id)
-           AS rk
-  FROM bands
-),
--- single-pass capped pairs (the dedup._capped_bucket_pairs round-6
--- rewrite, SQL form; see _Q_SIMHASH_ND_SPARK): head list bounded by
--- the cap rides a full-frame window over the same partitioning, pairs
--- fan out as an array expression — no self-joins, the bands subtree
--- is evaluated once instead of four times. Tail rows star-link to
--- heads[0] (= rk 1, the bucket minimum), as the old rk = 1 join did.
-staged AS (
-  SELECT doc_id, rk,
-         sort_array(collect_list(CASE WHEN rk <= 3 THEN doc_id END)
-           OVER (PARTITION BY band, band_hash)) AS heads
-  FROM ranked
-)
-SELECT DISTINCT p.doc1 AS doc1, p.doc2 AS doc2
-FROM staged
-LATERAL VIEW explode(
-  CASE WHEN rk <= 3 THEN
-    transform(slice(heads, rk + 1, 3),
-              h -> named_struct('doc1', doc_id, 'doc2', h))
-  ELSE
-    array(named_struct('doc1', heads[0], 'doc2', doc_id))
-  END) x AS p
-"""
+
+
 _Q_LSH_DUCK = """
 WITH toks AS (
   SELECT CAST(doc_id AS VARCHAR) AS doc_id,
@@ -819,17 +632,16 @@ SELECT DISTINCT doc1, doc2 FROM (
 # vote comes from md5 hex digit b%32 — its high bit (>=8) for b<32, its
 # second bit (&4) for b>=32. Bit 63 is assembled as -2^63 (two's
 # complement) so the signature fits a signed BIGINT in both engines.
-# The SPARK twin uses the wide-aggregate form (ONE row and ONE md5 per
-# token, 64 conditional-sum aggregates — the token×bits explode costs
-# 64 md5s per token and 64× the shuffle rows; measured 7.4 s vs ~2 s at
-# sf0.1, BENCH.md round 4). The DuckDB twin keeps the per-bit CTE —
-# same values, and the two dissimilar formulations agreeing is itself
-# oracle strength.
-_Q_SIMHASH_SPARK = _SIMHASH_VOTES_CTE + """
-SELECT doc_id,
-       %s AS simhash
-FROM votes
-""" % _simhash_sig_sql()
+# The library (dedup.simhash) uses the wide-aggregate form (ONE row and
+# ONE md5 per token, 64 conditional-sum aggregates); the oracle keeps
+# the per-bit CTE — same values, and the two dissimilar formulations
+# agreeing is itself oracle strength.
+def _dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from jochre3_ocr_spark.operators.dedup import simhash
+
+    return simhash(_table(spark, sf_dir, "documents"))
+
+
 _Q_SIMHASH_DUCK = """
 WITH toks AS (
   SELECT CAST(doc_id AS VARCHAR) AS doc_id,
@@ -857,32 +669,13 @@ FROM bits
 GROUP BY doc_id
 """
 
-_Q_ANN_SPARK = """
-WITH q AS (
-  SELECT vec_id AS qid, pos, CAST(val AS DOUBLE) AS v
-  FROM embeddings LATERAL VIEW posexplode(embedding) x AS pos, val
-  WHERE vec_id < 5
-),
-c AS (
-  SELECT vec_id AS cid, pos, CAST(val AS DOUBLE) AS v
-  FROM embeddings LATERAL VIEW posexplode(embedding) x AS pos, val
-),
-dots AS (
-  SELECT q.qid, c.cid,
-         sum(q.v * c.v) AS dot,
-         sqrt(sum(q.v * q.v)) AS nq,
-         sqrt(sum(c.v * c.v)) AS nc
-  FROM q JOIN c ON q.pos = c.pos
-  GROUP BY q.qid, c.cid
-)
-SELECT qid, cid, rank FROM (
-  SELECT qid, cid,
-         row_number() OVER (
-           PARTITION BY qid ORDER BY dot / (nq * nc) DESC, cid
-         ) AS rank
-  FROM dots WHERE qid <> cid
-) t WHERE rank <= 5
-"""
+
+def _ann_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from jochre3_ocr_spark.operators.similarity import cosine_topk
+
+    return cosine_topk(_table(spark, sf_dir, "embeddings"), "vec_id < 5", k=5)
+
+
 _Q_ANN_DUCK = """
 WITH q AS (
   SELECT vec_id AS qid,
@@ -919,12 +712,6 @@ FROM embeddings LATERAL VIEW posexplode(embedding) x AS pos, val
 GROUP BY label, pos
 """
 _Q_CENTROIDS_DUCK = """
-SELECT label,
-       CAST(generate_subscripts(embedding, 1) AS INTEGER) AS dim,
-       CAST(unnest(embedding) AS DOUBLE) AS v
-FROM embeddings
-"""
-_Q_CENTROIDS_DUCK = """
 WITH e AS (
   SELECT label,
          generate_subscripts(embedding, 1) AS dim,
@@ -935,20 +722,12 @@ SELECT label, CAST(dim AS INTEGER) AS dim, round(avg(v), 4) + 0.0 AS centroid
 FROM e GROUP BY label, dim
 """
 
-_Q_QUALITY_SPARK = """
-WITH toks AS (
-  SELECT CAST(doc_id AS STRING) AS doc_id, lang, text,
-         filter(split(text, ' '), x -> x <> '') AS t
-  FROM documents
-)
-SELECT doc_id, lang,
-       size(t) AS n_tokens,
-       round(length(replace(text, ' ', '')) / size(t), 4) AS avg_token_len,
-       round(size(filter(t, x -> x IN ('the', 'a'))) / size(t), 4)
-         AS stopword_ratio,
-       round(size(array_distinct(t)) / size(t), 4) AS distinct_ratio
-FROM toks
-"""
+def _text_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from jochre3_ocr_spark.operators.text_metrics import quality_features
+
+    return quality_features(_table(spark, sf_dir, "documents"))
+
+
 _Q_QUALITY_DUCK = """
 WITH toks AS (
   SELECT CAST(doc_id AS VARCHAR) AS doc_id, lang, text,
@@ -964,13 +743,12 @@ SELECT doc_id, lang,
 FROM toks
 """
 
-_Q_FINGERPRINT_SPARK = """
-SELECT CAST(doc_id AS STRING) AS doc_id,
-       md5(text) AS exact_fp,
-       md5(array_join(array_sort(array_distinct(
-           filter(split(text, ' '), x -> x <> ''))), ' ')) AS bag_fp
-FROM documents
-"""
+def _doc_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from jochre3_ocr_spark.operators.text_metrics import fingerprints
+
+    return fingerprints(_table(spark, sf_dir, "documents"))
+
+
 _Q_FINGERPRINT_DUCK = """
 SELECT CAST(doc_id AS VARCHAR) AS doc_id,
        md5(text) AS exact_fp,
@@ -979,7 +757,13 @@ SELECT CAST(doc_id AS VARCHAR) AS doc_id,
 FROM documents
 """
 
-_Q_TOKEN_STATS = """
+def _token_stats_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from jochre3_ocr_spark.operators.text_metrics import token_stats
+
+    return token_stats(_table(spark, sf_dir, "documents"))
+
+
+_Q_TOKEN_STATS_DUCK = """
 SELECT source,
        count(*)            AS n_docs,
        CAST(sum(n_chars) AS BIGINT) AS total_chars,
@@ -1190,27 +974,12 @@ FROM pairs p JOIN cos c ON p.doc_id = c.doc_id
 
 
 
-_Q_LANGID_SPARK = """
-WITH toks AS (
-  SELECT CAST(doc_id AS STRING) AS doc_id, lang,
-         filter(split(text, ' '), x -> x <> '') AS t
-  FROM documents
-),
-counts AS (
-  SELECT doc_id, lang,
-         size(filter(t, x -> x IN ('the', 'a', 'of'))) AS c_en,
-         size(filter(t, x -> x IN ('der', 'die', 'und'))) AS c_de,
-         size(filter(t, x -> x IN ('le', 'la', 'et'))) AS c_fr,
-         size(filter(t, x -> x IN ('el', 'los', 'y'))) AS c_es
-  FROM toks
-)
-SELECT doc_id, lang AS true_lang,
-       CASE greatest(c_en, c_de, c_fr, c_es)
-            WHEN c_en THEN 'en' WHEN c_de THEN 'de'
-            WHEN c_fr THEN 'fr' ELSE 'es' END AS predicted_lang,
-       c_en, c_de, c_fr, c_es
-FROM counts
-"""
+def _lang_id_heuristic(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from jochre3_ocr_spark.operators.text_metrics import language_id
+
+    return language_id(_table(spark, sf_dir, "documents"))
+
+
 _Q_LANGID_DUCK = """
 WITH toks AS (
   SELECT CAST(doc_id AS VARCHAR) AS doc_id, lang,
@@ -1247,7 +1016,7 @@ def _media_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     from jochre3_ocr_spark.operators.multimodal import extract_image_features
 
     docs = (
-        spark.read.parquet(f"{sf_dir}/documents.parquet")
+        _table(spark, sf_dir, "documents")
         .filter("doc_id < 40")
         .select("doc_id", "n_chars")
     )
@@ -1315,44 +1084,14 @@ FROM d
 # IVF-style ANN: coarse quantize every vector to its nearest of the first
 # 8 embeddings (the "centroids"), probe only the query's cell — the scale
 # path next to brute-force ann_cosine_topk. Portable SQL on both engines.
-_Q_IVF_SPARK = """
-WITH e AS (
-  SELECT vec_id, pos, CAST(val AS DOUBLE) AS v
-  FROM embeddings LATERAL VIEW posexplode(embedding) x AS pos, val
-),
-cent AS (SELECT vec_id AS cid, pos, v FROM e WHERE vec_id < 8),
-dots AS (
-  SELECT e.vec_id, c.cid,
-         sum(e.v * c.v) / (sqrt(sum(e.v * e.v)) * sqrt(sum(c.v * c.v))) AS cos
-  FROM e JOIN cent c ON e.pos = c.pos
-  GROUP BY e.vec_id, c.cid
-),
-assign AS (
-  SELECT vec_id, cid AS cell FROM (
-    SELECT vec_id, cid,
-           row_number() OVER (PARTITION BY vec_id ORDER BY cos DESC, cid) AS rn
-    FROM dots
-  ) t WHERE rn = 1
-),
-q AS (SELECT vec_id AS qid, pos, CAST(val AS DOUBLE) AS v
-      FROM embeddings LATERAL VIEW posexplode(embedding) x AS pos, val
-      WHERE vec_id < 5),
-c AS (SELECT vec_id AS cid2, pos, CAST(val AS DOUBLE) AS v
-      FROM embeddings LATERAL VIEW posexplode(embedding) x AS pos, val),
-pair AS (
-  SELECT q.qid, c.cid2 AS cid,
-         sum(q.v * c.v) / (sqrt(sum(q.v * q.v)) * sqrt(sum(c.v * c.v))) AS cos
-  FROM q JOIN c ON q.pos = c.pos
-  JOIN assign aq ON aq.vec_id = q.qid
-  JOIN assign ac ON ac.vec_id = c.cid2 AND ac.cell = aq.cell
-  GROUP BY q.qid, c.cid2
-)
-SELECT qid, cid, rank FROM (
-  SELECT qid, cid,
-         row_number() OVER (PARTITION BY qid ORDER BY cos DESC, cid) AS rank
-  FROM pair WHERE qid <> cid
-) t WHERE rank <= 3
-"""
+def _ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from jochre3_ocr_spark.operators.similarity import ivf_topk
+
+    return ivf_topk(
+        _table(spark, sf_dir, "embeddings"), "vec_id < 5", k=3, n_cells=8
+    )
+
+
 _Q_IVF_DUCK = """
 WITH e AS (
   SELECT vec_id, generate_subscripts(embedding, 1) AS pos,
@@ -1404,7 +1143,7 @@ def _q_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     the min-id keeper rule over the full domain."""
     from jochre3_ocr_spark.operators.similarity import semantic_dedup
 
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    emb = _table(spark, sf_dir, "embeddings")
     # the PRODUCTION pandas gram backend (round 6): row-identical to the
     # join form the DuckDB oracle replays (verified at sf0.001/0.01/0.1
     # and pinned by tests/test_semdedup.py backend-equality), 2.5×
@@ -1453,21 +1192,12 @@ FROM assign s LEFT JOIN comp ON s.vec_id = comp.node
 
 
 # embedding-cosine near-duplicate pairs over a label-blocked candidate set
-_Q_EMB_NEARDUP_SPARK = """
-WITH e AS (
-  SELECT vec_id, label, pos, CAST(val AS DOUBLE) AS v
-  FROM embeddings LATERAL VIEW posexplode(embedding) x AS pos, val
-),
-pair AS (
-  SELECT a.vec_id AS v1, b.vec_id AS v2,
-         sum(a.v * b.v) / (sqrt(sum(a.v * a.v)) * sqrt(sum(b.v * b.v))) AS cos
-  FROM e a JOIN e b
-    ON a.pos = b.pos AND a.label = b.label AND a.vec_id < b.vec_id
-  GROUP BY a.vec_id, b.vec_id
-)
-SELECT v1, v2, round(cos, 4) AS cosine
-FROM pair WHERE cos > 0.3
-"""
+def _dedup_embedding_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from jochre3_ocr_spark.operators.similarity import cosine_neardup_pairs
+
+    return cosine_neardup_pairs(_table(spark, sf_dir, "embeddings"))
+
+
 _Q_EMB_NEARDUP_DUCK = """
 WITH e AS (
   SELECT vec_id, label, generate_subscripts(embedding, 1) AS pos,
@@ -1503,7 +1233,7 @@ def _dehyphenate_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     from jochre3_ocr_spark.plans.pipeline import _spread_small_input
 
     hyph = _spread_small_input(
-        spark.read.parquet(f"{sf_dir}/documents.parquet").select(
+        _table(spark, sf_dir, "documents").select(
             SF.col("doc_id").cast("string").alias("doc_id"),
             SF.expr(
                 "array_join(transform(filter(split(text, ' '), x -> x != ''), "
@@ -1574,7 +1304,7 @@ def _word_frequency_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from jochre3_ocr_spark.plans.pipeline import _get_worker_lexicon
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = _table(spark, sf_dir, "documents")
     words = (
         docs.select(SF.explode(SF.split("text", " ")).alias("word"))
         .filter("word != ''")
@@ -1675,7 +1405,7 @@ def _layout_predict_boxes(spark: SparkSession, sf_dir: str) -> DataFrame:
     from jochre3_ocr_spark.plans.pipeline import _spread_small_input
 
     docs = _spread_small_input(
-        spark.read.parquet(f"{sf_dir}/documents.parquet").select(
+        _table(spark, sf_dir, "documents").select(
             F.col("doc_id").cast("string").alias("doc_id"), "text"
         )
     )
@@ -1781,7 +1511,7 @@ def _dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     DuckDB recursive CTE over the identical LSH pair set."""
     from jochre3_ocr_spark.operators.dedup import duplicate_clusters
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = _table(spark, sf_dir, "documents")
     return duplicate_clusters(docs)
 
 
@@ -1870,7 +1600,7 @@ def _corpus_chunking(spark: SparkSession, sf_dir: str) -> DataFrame:
     arithmetic is integer-exact so the DuckDB twin matches bit-for-bit."""
     from jochre3_ocr_spark.operators.text_metrics import chunk_documents
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = _table(spark, sf_dir, "documents")
     return chunk_documents(docs, max_tokens=64, overlap=8)
 
 
@@ -1906,7 +1636,7 @@ def _corpus_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus side stays one narrow scan + broadcast join."""
     from jochre3_ocr_spark.operators.dedup import decontaminate
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = _table(spark, sf_dir, "documents")
     bench = docs.filter("CAST(doc_id AS BIGINT) % 97 = 0")
     return decontaminate(docs, bench, n=4).filter("doc_id <> bench_id")
 
@@ -1944,7 +1674,7 @@ def _corpus_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     drop. Pure string comparison, identical expression in DuckDB."""
     from jochre3_ocr_spark.operators.text_metrics import deterministic_sample
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = _table(spark, sf_dir, "documents")
     out = deterministic_sample(
         docs, fractions={"src0": 0.8, "src1": 0.25, "src2": 1.0},
         by="source", salt="mix1",
@@ -1976,7 +1706,7 @@ def _interleaved_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
         interleaved_chunk_documents,
     )
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = _table(spark, sf_dir, "documents")
     return interleaved_chunk_documents(
         docs, max_tokens=64, overlap=8, media_every=10
     )
@@ -2037,7 +1767,7 @@ def _html_main_content(spark: SparkSession, sf_dir: str) -> DataFrame:
         synthesize_html_corpus,
     )
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = _table(spark, sf_dir, "documents")
     pages = synthesize_html_corpus(docs)
     # permissive threshold: ANY link-sparse non-chrome text block is
     # content, so the closed-form oracle covers 1-char tail paragraphs;
@@ -2108,7 +1838,7 @@ def _html_extraction_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     from jochre3_ocr_spark.plans.pipeline import extract_with_salting
     from jochre3_ocr_spark.sources.corpus import lexicon_words
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = _table(spark, sf_dir, "documents")
     bridged = html_spans_to_doc_spans(
         html_extract(synthesize_html_corpus(docs), min_content_chars=1)
     )
@@ -2167,7 +1897,7 @@ def _corpus_packing(spark: SparkSession, sf_dir: str) -> DataFrame:
     a DuckDB recursive CTE walking the identical numeric-doc_id order."""
     from jochre3_ocr_spark.operators.packing import pack_sequences
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = _table(spark, sf_dir, "documents")
     return pack_sequences(docs, capacity=256, n_shards=8)
 
 
@@ -2214,7 +1944,7 @@ def _dedup_clusters_full(spark: SparkSession, sf_dir: str) -> DataFrame:
     filters on is_canonical are safe without a corpus left-join."""
     from jochre3_ocr_spark.operators.dedup import duplicate_clusters
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = _table(spark, sf_dir, "documents")
     return duplicate_clusters(docs, include_singletons=True)
 
 
@@ -2230,7 +1960,7 @@ def _dedup_leakage_splits(spark: SparkSession, sf_dir: str) -> DataFrame:
         leakage_safe_splits,
     )
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = _table(spark, sf_dir, "documents")
     return leakage_safe_splits(
         duplicate_clusters(docs, include_singletons=True)
     )
@@ -2262,7 +1992,7 @@ def _dedup_corpus_verdicts(spark: SparkSession, sf_dir: str) -> DataFrame:
     clusters bit-identical while removing the b² pair blowup."""
     from jochre3_ocr_spark.operators.dedup import dedup_corpus
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = _table(spark, sf_dir, "documents")
     return dedup_corpus(docs)
 
 
@@ -2305,7 +2035,7 @@ def _dedup_adversarial_density(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from jochre3_ocr_spark.operators.dedup import dedup_corpus
 
-    base = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
+    base = _table(spark, sf_dir, "documents").select(
         F.col("doc_id").cast("string").alias("doc_id"), "text"
     )
     # top-2 BEFORE the rank window: orderBy(doc_id).limit(2) plans a
@@ -2386,7 +2116,7 @@ def _corpus_filter_verdicts(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from jochre3_ocr_spark.operators.dedup import duplicate_clusters
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = _table(spark, sf_dir, "documents")
     quality = docs.selectExpr(
         "CAST(doc_id AS STRING) AS doc_id",
         "size(filter(split(text, ' '), x -> x != '')) AS n_tokens",
@@ -2517,7 +2247,7 @@ def _skew_eval_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     from jochre3_ocr_spark.plans.pipeline import _spread_small_input
 
     docs = _spread_small_input(
-        spark.read.parquet(f"{sf_dir}/documents.parquet")
+        _table(spark, sf_dir, "documents")
         .filter("doc_id < 40")
         .select("doc_id")
     )
@@ -2563,7 +2293,7 @@ def _ann_ivf_kmeans_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     monotone in n_probe) is pinned by tests/test_dedup_similarity.py."""
     from jochre3_ocr_spark.operators.similarity import ivf_kmeans_topk
 
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    emb = _table(spark, sf_dir, "embeddings")
     return ivf_kmeans_topk(
         emb, "vec_id < 5", k=3, n_cells=8, kmeans_iters=3, n_probe=8
     )
@@ -2580,7 +2310,7 @@ def _ann_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     tests/test_pq.py."""
     from jochre3_ocr_spark.operators.similarity import pq_adc_topk
 
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    emb = _table(spark, sf_dir, "embeddings")
     return pq_adc_topk(
         emb, "vec_id < 5", k=3, m=8, ksub=4096, iters=1, sample_size=4096
     )
@@ -2595,7 +2325,7 @@ def _ann_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     is pinned by tests/test_pq.py."""
     from jochre3_ocr_spark.operators.similarity import pq_adc_topk
 
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    emb = _table(spark, sf_dir, "embeddings")
     return pq_adc_topk(
         emb, "vec_id < 5", k=3, m=8, ksub=4096, iters=1,
         sample_size=4096, n_cells=8, n_probe=8,
@@ -2681,7 +2411,7 @@ def _media_av_features(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
 
     media = (
-        spark.read.parquet(f"{sf_dir}/documents.parquet")
+        _table(spark, sf_dir, "documents")
         .filter("doc_id < 10")
         .select("doc_id")
         .mapInPandas(gen, schema="media_ref string, media_type string, content binary")
@@ -2766,7 +2496,7 @@ def _token_counts_bpe(spark: SparkSession, sf_dir: str) -> DataFrame:
     pure JVM regexp, no UDF."""
     from jochre3_ocr_spark.operators.text_metrics import bpe_token_counts
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = _table(spark, sf_dir, "documents")
     return bpe_token_counts(docs)
 
 
@@ -2808,7 +2538,7 @@ def _pdf_page_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     from jochre3_ocr_spark.sources import pdf as P
 
     pdfs = (
-        spark.read.parquet(f"{sf_dir}/documents.parquet")
+        _table(spark, sf_dir, "documents")
         .filter("doc_id < 24")
         .select("doc_id")
         .mapInPandas(make_pdfs, schema="doc_id string, content binary")
@@ -2880,7 +2610,7 @@ def _corpus_word_crop_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
     from jochre3_ocr_spark.sources.extractors import extract_crops
 
     docs = _spread_small_input(
-        spark.read.parquet(f"{sf_dir}/documents.parquet").select(
+        _table(spark, sf_dir, "documents").select(
             F.col("doc_id").cast("string").alias("doc_id"), "text"
         )
     )
@@ -2980,7 +2710,7 @@ def _q_events_asof(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from jochre3_ocr_spark.operators.temporal import asof_join
 
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
+    ev = _table(spark, sf_dir, "events")
     out = asof_join(
         ev.where("event_type = 'purchase'"),
         ev.where("event_type = 'click'"),
@@ -3024,7 +2754,7 @@ def _q_events_range_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from jochre3_ocr_spark.operators.temporal import range_join_binned
 
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
+    ev = _table(spark, sf_dir, "events")
     pairs = range_join_binned(
         ev.where("event_type = 'purchase'"),
         ev.where("event_type = 'view'"),
@@ -3052,7 +2782,7 @@ GROUP BY 1
 def _q_dedup_substring_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Merged per-doc spans of corpus-repeated 8-token windows
     (operators/substring.py, the Lee et al. exact-substring construction)."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = _table(spark, sf_dir, "documents")
     from jochre3_ocr_spark.operators.substring import duplicated_window_spans
 
     return duplicated_window_spans(docs, k=8, min_count=2)
@@ -3061,7 +2791,7 @@ def _q_dedup_substring_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _q_dedup_substring_strip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Every document with repeated-window spans removed; fully-covered
     docs keep an empty clean_text (they are exact duplicates)."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = _table(spark, sf_dir, "documents")
     from jochre3_ocr_spark.operators.substring import strip_duplicated_spans
 
     return strip_duplicated_spans(docs, k=8, min_count=2)
@@ -3119,7 +2849,7 @@ def _bench_slices(spark: SparkSession, sf_dir: str):
     corpus passages are exactly how real contamination happens."""
     from pyspark.sql import functions as SF
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = _table(spark, sf_dir, "documents")
     return (
         docs.filter("CAST(doc_id AS BIGINT) % 97 = 0")
         .select("doc_id", SF.split("text", " ").alias("__t"))
@@ -3137,7 +2867,7 @@ def _q_contaminated_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     — benchmark window set broadcast; only (id, pos) hits shuffle)."""
     from jochre3_ocr_spark.operators.substring import contaminated_window_spans
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = _table(spark, sf_dir, "documents")
     return contaminated_window_spans(
         docs, _bench_slices(spark, sf_dir), k=8
     )
@@ -3148,7 +2878,7 @@ def _q_decontaminate_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     the document (vs corpus_decontaminate's whole-doc flagging)."""
     from jochre3_ocr_spark.operators.substring import decontaminate_spans
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = _table(spark, sf_dir, "documents")
     return decontaminate_spans(docs, _bench_slices(spark, sf_dir), k=8)
 
 
@@ -3208,7 +2938,7 @@ def _q_contamination_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     (operators/substring.contamination_stats, threshold 0.05)."""
     from jochre3_ocr_spark.operators.substring import contamination_stats
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = _table(spark, sf_dir, "documents")
     return contamination_stats(docs, _bench_slices(spark, sf_dir), k=8)
 
 
@@ -3245,7 +2975,7 @@ def _q_repetition_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     5-gram coverage."""
     from jochre3_ocr_spark.operators.repetition import repetition_features
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = _table(spark, sf_dir, "documents")
     return repetition_features(docs)
 
 
@@ -3311,7 +3041,7 @@ def _q_bigram_lm_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     LM trained on the doc_id % 10 < 3 split, scoring every document."""
     from jochre3_ocr_spark.operators.lm import bigram_lm_scores
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = _table(spark, sf_dir, "documents")
     train = docs.filter("CAST(doc_id AS BIGINT) % 10 < 3")
     return bigram_lm_scores(docs, train)
 
@@ -3356,7 +3086,7 @@ def _q_nb_langid(spark: SparkSession, sf_dir: str) -> DataFrame:
     6 decimals, argmax with label tiebreak — in one SQL statement."""
     from jochre3_ocr_spark.operators.classifier import nb_classify
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = _table(spark, sf_dir, "documents")
     return nb_classify(
         docs, docs.where("doc_id % 2 = 0"), label_col="lang"
     )
@@ -3408,7 +3138,7 @@ def _q_decontaminate_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     best benchmark match by exact 5-gram Jaccard, keep iff < 0.05."""
     from jochre3_ocr_spark.operators.dedup import decontaminate_jaccard
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = _table(spark, sf_dir, "documents")
     return decontaminate_jaccard(
         docs, _bench_slices(spark, sf_dir), n=5, threshold=0.05
     )
@@ -3449,7 +3179,7 @@ def _q_tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     sklearn-smoothed idf, rank ties broken alphabetically)."""
     from jochre3_ocr_spark.operators.text_metrics import tfidf_top_terms
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = _table(spark, sf_dir, "documents")
     return tfidf_top_terms(docs, k=3)
 
 
@@ -3478,7 +3208,7 @@ def _q_pivot_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     mirrors with conditional aggregation, the engine-neutral form)."""
     from pyspark.sql import functions as SF
 
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
+    orders = _table(spark, sf_dir, "orders")
     pivoted = (
         orders.withColumn("o_year", SF.year("o_orderdate"))
         .groupBy("o_year")
@@ -3525,7 +3255,7 @@ def _q_redact_pii(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from jochre3_ocr_spark.operators.redaction import redact_pii
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = _table(spark, sf_dir, "documents")
     did = SF.col("doc_id").cast("bigint")
     injected = SF.when(
         did % 3 == 0,
@@ -3584,7 +3314,7 @@ def _q_bpe_merge_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
     (text_metrics.bpe_merge_candidates)."""
     from jochre3_ocr_spark.operators.text_metrics import bpe_merge_candidates
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = _table(spark, sf_dir, "documents")
     return bpe_merge_candidates(docs, k=20)
 
 
@@ -3609,7 +3339,7 @@ def _q_bpe_train(spark: SparkSession, sf_dir: str) -> DataFrame:
     tie-break all have cross-engine witnesses."""
     from jochre3_ocr_spark.operators.bpe import train_bpe
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = _table(spark, sf_dir, "documents")
     return train_bpe(docs, n_merges=3)
 
 
@@ -3666,7 +3396,7 @@ def _q_bpe_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     projection, zero shuffle."""
     from jochre3_ocr_spark.operators.bpe import apply_bpe, train_bpe
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = _table(spark, sf_dir, "documents")
     merges = [
         (r.left, r.right)
         for r in train_bpe(docs, n_merges=3).orderBy("rnk").collect()
@@ -3715,7 +3445,7 @@ def _q_vocab_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     (text_metrics.vocab_coverage, k = 100 / 1000)."""
     from jochre3_ocr_spark.operators.text_metrics import vocab_coverage
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = _table(spark, sf_dir, "documents")
     return vocab_coverage(docs, ks=(100, 1000))
 
 
@@ -3744,7 +3474,7 @@ def _q_mixture_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     deterministic_sample(fractions=)."""
     from jochre3_ocr_spark.operators.text_metrics import mixture_plan
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = _table(spark, sf_dir, "documents")
     return mixture_plan(docs, {"src0": 0.5, "src1": 0.3, "src2": 0.2})
 
 
@@ -3775,7 +3505,7 @@ def _q_inverted_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     cross-engine equality exact."""
     from jochre3_ocr_spark.operators.text_metrics import inverted_index
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = _table(spark, sf_dir, "documents")
     return inverted_index(docs, max_postings=8)
 
 
@@ -3801,7 +3531,7 @@ def _q_correlated_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     so row membership never rides on a last-ulp avg difference between
     engines (Catalyst decorrelates to an agg+join; the oracle runs the
     same correlated form natively)."""
-    spark.read.parquet(f"{sf_dir}/part.parquet").createOrReplaceTempView(
+    _table(spark, sf_dir, "part").createOrReplaceTempView(
         "__part_corr"
     )
     return spark.sql(
@@ -3827,7 +3557,7 @@ WHERE p_retailprice > round(1.05 * (
 def _q_ann_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Multi-table random-hyperplane LSH top-3 (operators/similarity.py);
     the oracle rebuilds the md5-derived integer planes from scratch."""
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    emb = _table(spark, sf_dir, "embeddings")
     from jochre3_ocr_spark.operators.similarity import lsh_topk
 
     return lsh_topk(emb, "vec_id < 5", k=3, n_tables=4, n_bits=8)
@@ -3875,7 +3605,7 @@ def _q_cms_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     match bit-for-bit."""
     from jochre3_ocr_spark.operators.sketches import cms_estimate, cms_sketch
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = _table(spark, sf_dir, "documents")
     sk = cms_sketch(docs, depth=4, width_hex=2)
     exact = (
         docs.select(
@@ -3931,7 +3661,7 @@ def _q_bloom_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
         bloom_decontaminate,
     )
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = _table(spark, sf_dir, "documents")
     bits = bloom_bits(docs.filter("doc_id % 97 = 0"), n=4, k=3, width_hex=3)
     return bloom_decontaminate(
         docs.filter("doc_id % 97 <> 0"), bits, n=4, k=3, width_hex=3
@@ -3986,7 +3716,7 @@ def _q_bloom_packed(spark: SparkSession, sf_dir: str) -> DataFrame:
         bloom_decontaminate_packed,
     )
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = _table(spark, sf_dir, "documents")
     bm = bloom_bitmap(docs.filter("doc_id % 97 = 0"), n=4, k=3, width_hex=3)
     return bloom_decontaminate_packed(
         docs.filter("doc_id % 97 <> 0"), bm, n=4, k=3, width_hex=3
@@ -4003,7 +3733,7 @@ def _q_dsir_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
         dsir_select,
     )
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = _table(spark, sf_dir, "documents")
     w = dsir_log_weights(docs, docs.filter("lang = 'en'"), width_hex=2)
     return dsir_select(w, keep=100)
 
@@ -4054,7 +3784,7 @@ def _q_url_canonical(spark: SparkSession, sf_dir: str) -> DataFrame:
         synthesize_urls,
     )
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = _table(spark, sf_dir, "documents")
     return canonicalize_urls(synthesize_urls(docs, share_mod=400)).select(
         "doc_id", "url", "canonical_url", "host"
     )
@@ -4163,7 +3893,7 @@ def _q_host_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     and the duplicates URL canonicalization alone removes."""
     from jochre3_ocr_spark.operators.urls import host_stats, synthesize_urls
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = _table(spark, sf_dir, "documents")
     return host_stats(synthesize_urls(docs, share_mod=400))
 
 
@@ -4191,7 +3921,7 @@ def _q_robots_verdicts(spark: SparkSession, sf_dir: str) -> DataFrame:
         synthesize_urls,
     )
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = _table(spark, sf_dir, "documents")
     u = synthesize_urls(docs, share_mod=400)
     return robots_verdicts(u, synthesize_robots_rules(u))
 
@@ -4223,7 +3953,7 @@ def _q_web_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
         synthesize_link_graph,
     )
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = _table(spark, sf_dir, "documents")
     return pagerank(synthesize_link_graph(docs), iters=3)
 
 
@@ -4302,7 +4032,7 @@ def _q_web_domain_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
         synthesize_link_graph,
     )
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = _table(spark, sf_dir, "documents")
     ranks = pagerank(synthesize_link_graph(docs), iters=3).select(
         F.col("node").alias("host"), F.col("rank").alias("host_rank")
     )
@@ -4378,7 +4108,7 @@ def _q_frontier(spark: SparkSession, sf_dir: str) -> DataFrame:
         synthesize_urls,
     )
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = _table(spark, sf_dir, "documents")
     u = synthesize_urls(docs, share_mod=400)
     ranks = bridge_node_ranks(pagerank(synthesize_link_graph(docs), iters=3))
     return frontier_priorities(u, synthesize_robots_rules(u), ranks)
@@ -4444,7 +4174,7 @@ def _q_snapshot_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
     the recrawl and replays the full-outer fingerprint compare."""
     from jochre3_ocr_spark.operators.urls import snapshot_delta
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
+    docs = _table(spark, sf_dir, "documents").select(
         "doc_id", "text"
     )
     survivors = docs.where("doc_id % 7 != 0").select(
@@ -4498,7 +4228,7 @@ def _q_web_anchor_texts(spark: SparkSession, sf_dir: str) -> DataFrame:
         synthesize_anchor_edges,
     )
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = _table(spark, sf_dir, "documents")
     return anchor_text_topk(synthesize_anchor_edges(docs), k=3)
 
 
@@ -4550,7 +4280,7 @@ def _q_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
         minhash_band_table,
     )
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = _table(spark, sf_dir, "documents")
     band_table = minhash_band_table(docs.filter("doc_id % 3 <> 0"))
     return incremental_dedup_verdicts(
         docs.filter("doc_id % 3 = 0"), band_table
@@ -4652,25 +4382,25 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "q_percentiles": _sql(_Q_PERCENTILES_SPARK),
         "q_events_hourly": _sql(_Q_EVENTS_SPARK),
         "q_events_sessions": _sql(_Q_SESSIONS_SPARK),
-        "dedup_exact": _sql(_Q_DEDUP_EXACT_SPARK),
-        "dedup_ngram_jaccard": _sql(_Q_NGRAM_JACCARD_SPARK),
-        "dedup_minhash_signature": _sql(_Q_MINHASH_SPARK),
-        "dedup_simhash": _sql(_Q_SIMHASH_SPARK),
-        "ann_cosine_topk": _sql(_Q_ANN_SPARK),
+        "dedup_exact": _dedup_exact,
+        "dedup_ngram_jaccard": _dedup_ngram_jaccard,
+        "dedup_minhash_signature": _dedup_minhash_signature,
+        "dedup_simhash": _dedup_simhash,
+        "ann_cosine_topk": _ann_cosine_topk,
         "embedding_centroids": _sql(_Q_CENTROIDS_SPARK),
-        "text_quality": _sql(_Q_QUALITY_SPARK),
-        "doc_fingerprint": _sql(_Q_FINGERPRINT_SPARK),
-        "token_stats_by_source": _sql(_Q_TOKEN_STATS),
+        "text_quality": _text_quality,
+        "doc_fingerprint": _doc_fingerprint,
+        "token_stats_by_source": _token_stats_by_source,
         "eval_text_metrics": _sql(_Q_EVAL_SPARK),
-        "lang_id_heuristic": _sql(_Q_LANGID_SPARK),
+        "lang_id_heuristic": _lang_id_heuristic,
         "ocr_layout_end_to_end": _ocr_layout_end_to_end,
         "media_image_features": _media_features,
         "skew_eval_stats": _skew_eval_stats,
-        "ann_ivf_topk": _sql(_Q_IVF_SPARK),
-        "dedup_embedding_neardup": _sql(_Q_EMB_NEARDUP_SPARK),
+        "ann_ivf_topk": _ann_ivf_topk,
+        "dedup_embedding_neardup": _dedup_embedding_neardup,
         "dehyphenate_corpus": _dehyphenate_corpus,
         "word_frequency_corpus": _word_frequency_corpus,
-        "dedup_minhash_lsh": _sql(_Q_LSH_SPARK),
+        "dedup_minhash_lsh": _dedup_minhash_lsh,
         "dedup_duplicate_clusters": _dedup_clusters,
         "dedup_clusters_full": _dedup_clusters_full,
         "dedup_leakage_splits": _dedup_leakage_splits,
@@ -4684,7 +4414,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "corpus_sample": _corpus_sample,
         "interleaved_chunks": _interleaved_chunks,
         "corpus_filter_verdicts": _corpus_filter_verdicts,
-        "dedup_simhash_neardup": _sql(_Q_SIMHASH_ND_SPARK),
+        "dedup_simhash_neardup": _dedup_simhash_neardup,
         "pdf_page_scan": _pdf_page_scan,
         "token_counts_bpe": _token_counts_bpe,
         "ann_ivf_kmeans_topk": _ann_ivf_kmeans_topk,
@@ -4766,7 +4496,7 @@ def oracle_sql() -> dict[str, str]:
         "embedding_centroids": _Q_CENTROIDS_DUCK,
         "text_quality": _Q_QUALITY_DUCK,
         "doc_fingerprint": _Q_FINGERPRINT_DUCK,
-        "token_stats_by_source": _Q_TOKEN_STATS,
+        "token_stats_by_source": _Q_TOKEN_STATS_DUCK,
         "eval_text_metrics": _Q_EVAL_DUCK,
         "lang_id_heuristic": _Q_LANGID_DUCK,
         "ann_ivf_topk": _Q_IVF_DUCK,

@@ -1,6 +1,7 @@
 """Deduplication operators over a text-document DataFrame — first-class
-library API (the SQL twins live in __spark_entry__ for the DuckDB
-correctness gate; tests assert both produce identical results).
+library API. The ``__spark_entry__`` queries call these functions
+directly, and their DuckDB oracles (tests/test_entry_oracle.py) check
+them row for row.
 
 All operators are pure DataFrame compositions (JVM/codegen end to end —
 no Python in the hot path):
@@ -22,40 +23,30 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.window import Window
 
-#: smallest signed 64-bit value — used for the two's-complement assembly of
-#: 64-bit simhash signatures (bit 63 contributes -2^63, not +2^63, so the
-#: signature always fits a BIGINT in both Spark and DuckDB).
-_LONG_MIN = -(1 << 63)
-
 
 def _tokens(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     from jochre3_ocr_spark.plans.pipeline import _spread_small_input
 
     # shingle/hash fan-out cost is per row, but a compact parquet input
     # yields 1-2 scan splits — spread before the explode (no-op when the
-    # input already supplies >= slots partitions)
+    # input already supplies >= slots partitions). SQL text here and in
+    # the helpers below: a Column built call by call costs a py4j round
+    # trip per call, and plan construction is most of a small query.
     return _spread_small_input(
-        df.select(
-            F.col(id_col).cast("string").alias("doc_id"),
-            F.filter(F.split(F.col(text_col), " "), lambda x: x != "").alias("t"),
+        df.selectExpr(
+            f"CAST(`{id_col}` AS STRING) AS doc_id",
+            f"filter(split(`{text_col}`, ' '), x -> x <> '') AS t",
         )
     )
 
 
 def _shingles(toks: DataFrame, n: int = 3) -> DataFrame:
     """Distinct word n-grams per doc."""
-    return toks.filter(F.size("t") >= n).select(
+    gram = ", ".join(f"t[i + {k}]" for k in range(n))
+    return toks.where(f"size(t) >= {n}").selectExpr(
         "doc_id",
-        F.explode(
-            F.array_distinct(
-                F.transform(
-                    F.sequence(F.lit(0), F.size("t") - n),
-                    lambda i: F.concat_ws(
-                        " ", *[F.element_at(F.col("t"), (i + k + 1)) for k in range(n)]
-                    ),
-                )
-            )
-        ).alias("shingle"),
+        "explode(array_distinct(transform(sequence(0, size(t) - "
+        f"{n}), i -> concat_ws(' ', {gram})))) AS shingle",
     )
 
 
@@ -205,40 +196,30 @@ def ngram_jaccard_pairs(
     generation cap; the jaccard of pairs sharing ONLY stop-phrases is
     underestimated, which is the point)."""
     sh = _shingles(_tokens(df, id_col, text_col), n)
-    counts = sh.groupBy("doc_id").agg(F.count("*").alias("n"))
+    counts = sh.groupBy("doc_id").agg(F.expr("count(*) AS n"))
     if max_df is not None:
         rare = (
             sh.groupBy("shingle")
-            .agg(F.count("*").alias("df"))
-            .filter(F.col("df") <= max_df)
+            .agg(F.expr("count(*) AS df"))
+            .where(f"df <= {max_df}")
             .select("shingle")
         )
         sh = sh.join(rare, "shingle", "left_semi")
-    a = sh.alias("a")
-    b = sh.alias("b")
     pairs = (
-        a.join(
-            b,
-            (F.col("a.shingle") == F.col("b.shingle"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .groupBy(F.col("a.doc_id").alias("doc1"), F.col("b.doc_id").alias("doc2"))
-        .agg(F.count("*").alias("common"))
-        .filter(F.col("common") >= min_common)
+        sh.alias("a")
+        .join(sh.alias("b"), F.expr("a.shingle = b.shingle AND a.doc_id < b.doc_id"))
+        .groupBy(F.expr("a.doc_id AS doc1"), F.expr("b.doc_id AS doc2"))
+        .agg(F.expr("count(*) AS common"))
+        .where(f"common >= {min_common}")
     )
-    ca = counts.alias("ca")
-    cb = counts.alias("cb")
     return (
-        pairs.join(ca, F.col("doc1") == F.col("ca.doc_id"))
-        .join(cb, F.col("doc2") == F.col("cb.doc_id"))
-        .select(
+        pairs.join(counts.alias("ca"), F.expr("doc1 = ca.doc_id"))
+        .join(counts.alias("cb"), F.expr("doc2 = cb.doc_id"))
+        .selectExpr(
             "doc1",
             "doc2",
             "common",
-            F.round(
-                F.col("common") / (F.col("ca.n") + F.col("cb.n") - F.col("common")),
-                4,
-            ).alias("jaccard"),
+            "round(common / (ca.n + cb.n - common), 4) AS jaccard",
         )
     )
 
@@ -246,13 +227,13 @@ def ngram_jaccard_pairs(
 def _seed_min_exprs(num_hashes: int) -> list:
     """The per-seed MinHash aggregate expressions of the wide
     single-aggregation form: ``min(md5('<s>:' || shingle)) AS mh<s>``
-    for each seed.  ONE shared definition (the simhash
-    ``_simhash_vote_cols_sql`` lesson): the ``f"{s}:"`` prefix and the
-    md5-min construction are the bit-parity contract with the unchanged
-    SQL oracles (``md5(CAST(s AS VARCHAR) || ':' || shingle)``), so
-    signatures and bands must never drift apart on a one-sided edit."""
+    for each seed.  ONE shared definition for signatures and bands: the
+    ``f"{s}:"`` prefix and the md5-min construction are the bit-parity
+    contract with the DuckDB oracles
+    (``md5(CAST(s AS VARCHAR) || ':' || shingle)``), so signatures and
+    bands must never drift apart on a one-sided edit."""
     return [
-        F.min(F.md5(F.concat(F.lit(f"{s}:"), F.col("shingle")))).alias(f"mh{s}")
+        F.expr(f"min(md5(concat('{s}:', shingle))) AS mh{s}")
         for s in range(num_hashes)
     ]
 
@@ -274,18 +255,14 @@ def minhash_signatures(
     shuffle, and a whole Exchange disappears (guide §2.3/§2.4). The
     per-seed md5s are the identical strings the exploded construction
     hashed, and the concat order is seed order — the signature is
-    bit-identical (pinned by test_minhash_matches_sql against the
-    unchanged SQL oracle)."""
+    bit-identical (pinned by the ``dedup_minhash_signature`` DuckDB
+    oracle, which runs the exploded form)."""
     sh = _shingles(_tokens(df, id_col, text_col), n)
+    mins = ", ".join(f"mh{s}" for s in range(num_hashes))
     return (
         sh.groupBy("doc_id")
         .agg(*_seed_min_exprs(num_hashes))
-        .select(
-            "doc_id",
-            F.md5(
-                F.concat_ws(",", *[F.col(f"mh{s}") for s in range(num_hashes)])
-            ).alias("signature"),
-        )
+        .selectExpr("doc_id", f"md5(concat_ws(',', {mins})) AS signature")
     )
 
 
@@ -449,29 +426,19 @@ def _minhash_bands(
     trailing band with fewer than ``band_size`` seeds (num_hashes not
     divisible) concatenates only the seeds that exist, as before."""
     sh = _shingles(_tokens(df, id_col, text_col), n)
-    mins = _seed_min_exprs(num_hashes)
-    n_bands = -(-num_hashes // band_size)
-    band_exprs = [
-        F.md5(
-            F.concat_ws(
-                ",",
-                *[
-                    F.col(f"mh{s}")
-                    for s in range(
-                        k * band_size, min((k + 1) * band_size, num_hashes)
-                    )
-                ],
-            )
+    bands = ", ".join(
+        "md5(concat_ws(',', "
+        + ", ".join(
+            f"mh{s}"
+            for s in range(k * band_size, min((k + 1) * band_size, num_hashes))
         )
-        for k in range(n_bands)
-    ]
+        + "))"
+        for k in range(-(-num_hashes // band_size))
+    )
     return (
         sh.groupBy("doc_id")
-        .agg(*mins)
-        .select(
-            "doc_id",
-            F.posexplode(F.array(*band_exprs)).alias("band", "band_hash"),
-        )
+        .agg(*_seed_min_exprs(num_hashes))
+        .selectExpr("doc_id", f"posexplode(array({bands})) AS (band, band_hash)")
     )
 
 
@@ -543,15 +510,41 @@ def lsh_bucket_stats(
     )
 
 
-def _bit_condition(b: int):
-    """Per-token vote condition for bit ``b``: the md5 hex digit at
-    position b (mod 32) — its HIGH bit (digit ≥ 8) for b < 32 and its
-    SECOND bit (digit & 4) for b ≥ 32, giving 64 independent-enough bits
-    from ONE md5 per token. Identical to the historical rule for
-    bits ≤ 32, and expressible with the same substr/IN construction in
-    DuckDB for the oracle twins."""
-    digit = F.substring(F.md5("token"), (b % 32) + 1, 1)
-    return digit.isin(*"89abcdef") if b < 32 else digit.isin(*"4567cdef")
+def _simhash_vote_cols_sql(bits: int) -> list[str]:
+    """The per-bit vote aggregates ``sum(...) AS v<b>`` over a ``token``
+    column, as SQL text. Bit b's per-token vote is the md5 hex digit at
+    position b (mod 32): its HIGH bit (digit >= 8) for b < 32 and its
+    SECOND bit (digit & 4) for b >= 32, giving 64 independent-enough
+    bits from ONE md5 per token. The DuckDB oracles spell the same rule
+    with the same substr/IN construction. SQL text rather than Column
+    calls: one parse per aggregate instead of a dozen py4j round trips
+    (64 bits built call by call cost ~12k round trips per plan)."""
+    cols = []
+    for b in range(bits):
+        digs = ("'8','9','a','b','c','d','e','f'" if b < 32
+                else "'4','5','6','7','c','d','e','f'")
+        cols.append(
+            f"sum(CASE WHEN substr(md5(token), {b % 32 + 1}, 1) "
+            f"IN ({digs}) THEN 1 ELSE -1 END) AS v{b}"
+        )
+    return cols
+
+
+def _simhash_band_sql(k: int, band_bits: int) -> str:
+    """Band k of the vote columns packed into a signed BIGINT: vote
+    v{k*band_bits + j} >= 0 sets bit j. The full signature is band 0 of
+    width ``bits``. Bit 63 contributes -2^63 (two's complement), so 64
+    bits fit a BIGINT in both Spark and DuckDB; Spark cannot parse a
+    bare -9223372036854775808 literal."""
+    terms = []
+    for j in range(band_bits):
+        const = ("(CAST(-9223372036854775807 AS BIGINT) - 1)"
+                 if j == 63 else str(1 << j))
+        terms.append(
+            f"CASE WHEN v{k * band_bits + j} >= 0 THEN {const} "
+            "ELSE CAST(0 AS BIGINT) END"
+        )
+    return "CAST(" + " + ".join(terms) + " AS BIGINT)"
 
 
 def _simhash_votes(
@@ -565,33 +558,12 @@ def _simhash_votes(
     this wide-aggregate form (BENCH.md round 4). Bit b of the signature
     is set iff v{b} >= 0."""
     assert bits <= 64, "simhash signatures are at most 64 bits (BIGINT)"
-    toks = _tokens(df, id_col, text_col).select(
-        "doc_id", F.explode(F.array_distinct("t")).alias("token")
+    toks = _tokens(df, id_col, text_col).selectExpr(
+        "doc_id", "explode(array_distinct(t)) AS token"
     )
-    aggs = [
-        F.sum(
-            F.when(_bit_condition(b), F.lit(1)).otherwise(F.lit(-1))
-        ).alias(f"v{b}")
-        for b in range(bits)
-    ]
-    return toks.groupBy("doc_id").agg(*aggs)
-
-
-def _signature_expr(bits: int):
-    """Signed-BIGINT signature from the vote columns v0..v{bits-1}:
-    bit b contributes 2^b (python-literal, exact) when v{b} >= 0; bit 63
-    contributes -2^63 (two's complement) so 64 bits fit a BIGINT."""
-    contrib = [
-        F.when(
-            F.col(f"v{b}") >= 0,
-            F.lit(_LONG_MIN if b == 63 else (1 << b)),
-        ).otherwise(F.lit(0))
-        for b in range(bits)
-    ]
-    expr = contrib[0]
-    for c in contrib[1:]:
-        expr = expr + c
-    return expr.cast("bigint")
+    return toks.groupBy("doc_id").agg(
+        *[F.expr(c) for c in _simhash_vote_cols_sql(bits)]
+    )
 
 
 def simhash(
@@ -607,8 +579,8 @@ def simhash(
     conditional-sum aggregates in a single groupBy(doc_id) — no
     token×bits row explosion (see :func:`_simhash_votes`)."""
     votes = _simhash_votes(df, id_col, text_col, bits)
-    return votes.select(
-        "doc_id", _signature_expr(bits).alias("simhash")
+    return votes.selectExpr(
+        "doc_id", f"{_simhash_band_sql(0, bits)} AS simhash"
     )
 
 
@@ -623,42 +595,14 @@ def _simhash_bands(
     assert bits % n_bands == 0, "bits must divide evenly into n_bands"
     band_bits = bits // n_bands
     votes = _simhash_votes(df, id_col, text_col, bits)
-
-    def _band_expr(k: int):
-        # j == 63 only when band_bits == 64 (n_bands=1): the band IS the
-        # signature, so its top bit needs the same two's-complement
-        # treatment as _signature_expr — 1 << 63 overflows a literal
-        contrib = [
-            F.when(
-                F.col(f"v{k * band_bits + j}") >= 0,
-                F.lit(_LONG_MIN if j == 63 else (1 << j)),
-            ).otherwise(F.lit(0))
-            for j in range(band_bits)
-        ]
-        e = contrib[0]
-        for c in contrib[1:]:
-            e = e + c
-        return e.cast("bigint")
-
-    with_sig = votes.select(
-        "doc_id",
-        _signature_expr(bits).alias("simhash"),
-        *[_band_expr(k).alias(f"bv{k}") for k in range(n_bands)],
+    stack = ", ".join(
+        f"{k}, {_simhash_band_sql(k, band_bits)}" for k in range(n_bands)
     )
-    return with_sig.select(
+    return votes.selectExpr(
         "doc_id",
-        "simhash",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(k).alias("band"), F.col(f"bv{k}").alias("band_val")
-                    )
-                    for k in range(n_bands)
-                ]
-            )
-        ).alias("bb"),
-    ).select("doc_id", "simhash", "bb.band", "bb.band_val")
+        f"{_simhash_band_sql(0, bits)} AS simhash",
+        f"stack({n_bands}, {stack}) AS (band, band_val)",
+    )
 
 
 def simhash_bucket_stats(

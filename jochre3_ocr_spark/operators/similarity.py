@@ -1,6 +1,6 @@
 """Similarity search over an embedding column (array<float>) —
-first-class library API (SQL twins in __spark_entry__ for the DuckDB
-oracle; tests assert equality).
+first-class library API; the ``__spark_entry__`` queries call these
+functions and their DuckDB oracles check them.
 
 * brute-force cosine top-k — the exact baseline: posexplode both sides,
   join on position, aggregate dot/norms (all JVM; at scale, the
@@ -17,20 +17,21 @@ from pyspark.sql import DataFrame, functions as F
 
 
 def _exploded(df: DataFrame, id_col: str, vec_col: str, out_id: str) -> DataFrame:
-    return df.select(
-        F.col(id_col).alias(out_id), F.posexplode(vec_col).alias("pos", "val")
-    ).select(out_id, "pos", F.col("val").cast("double").alias("v"))
+    # SQL text: each Column call is a py4j round trip at plan construction
+    return df.selectExpr(
+        f"`{id_col}` AS {out_id}", f"posexplode(`{vec_col}`) AS (pos, val)"
+    ).selectExpr(out_id, "pos", "CAST(val AS DOUBLE) AS v")
 
 
 def _cosines(q: DataFrame, c: DataFrame, qid: str, cid: str) -> DataFrame:
     return (
-        q.join(c, "pos")
+        q.selectExpr(qid, "pos", "v AS qv")
+        .join(c.selectExpr(cid, "pos", "v AS cv"), "pos")
         .groupBy(qid, cid)
         .agg(
-            (
-                F.sum(q["v"] * c["v"])
-                / (F.sqrt(F.sum(q["v"] * q["v"])) * F.sqrt(F.sum(c["v"] * c["v"])))
-            ).alias("cos")
+            F.expr(
+                "sum(qv * cv) / (sqrt(sum(qv * qv)) * sqrt(sum(cv * cv))) AS cos"
+            )
         )
     )
 
@@ -44,16 +45,17 @@ def cosine_topk(
 ) -> DataFrame:
     """Exact top-k neighbors for the rows matching ``query_filter``.
     Returns (qid, cid, rank)."""
-    from pyspark.sql.window import Window
-
-    q = _exploded(df.filter(query_filter), id_col, vec_col, "qid").alias("q")
-    c = _exploded(df, id_col, vec_col, "cid").alias("c")
-    cos = _cosines(q, c, "qid", "cid").filter("qid <> cid")
-    w = Window.partitionBy("qid").orderBy(F.desc("cos"), F.asc("cid"))
+    q = _exploded(df.filter(query_filter), id_col, vec_col, "qid")
+    c = _exploded(df, id_col, vec_col, "cid")
     return (
-        cos.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("qid", "cid", "rank")
+        _cosines(q, c, "qid", "cid")
+        .where("qid <> cid")
+        .selectExpr(
+            "qid",
+            "cid",
+            "row_number() OVER (PARTITION BY qid ORDER BY cos DESC, cid) AS rank",
+        )
+        .where(f"rank <= {k}")
     )
 
 
@@ -70,8 +72,8 @@ def ivf_topk(
     query's cell. Returns (qid, cid, rank)."""
     from pyspark.sql.window import Window
 
-    e = _exploded(df, id_col, vec_col, "vid").alias("e")
-    cent = _exploded(df.filter(f"{id_col} < {n_cells}"), id_col, vec_col, "cell").alias("cent")
+    e = _exploded(df, id_col, vec_col, "vid")
+    cent = _exploded(df.filter(f"{id_col} < {n_cells}"), id_col, vec_col, "cell")
     cell_cos = _cosines(e, cent, "vid", "cell")
     w0 = Window.partitionBy("vid").orderBy(F.desc("cos"), F.asc("cell"))
     assign = (
@@ -1036,13 +1038,13 @@ def semantic_dedup(
 
     base = df.select(F.col(id_col).alias("vid"), F.col(vec_col).alias("emb"))
     if centroids is None:
-        e = _exploded(base, "vid", "emb", "vid").alias("e")
+        e = _exploded(base, "vid", "emb", "vid")
         # id-VALUE filter, not orderBy().limit(): the oracle's cent CTE
         # is `WHERE vec_id < n_cells`, and the two constructions only
         # coincide while ids are 0-contiguous (ivf_topk's convention)
         cent = _exploded(
             base.filter(F.col("vid") < n_cells), "vid", "emb", "cell"
-        ).alias("cent")
+        )
         w0 = Window.partitionBy("vid").orderBy(F.desc("cos"), F.asc("cell"))
         assign = (
             _cosines(e, cent, "vid", "cell")

@@ -1,6 +1,7 @@
 """Text-analysis operators over a document DataFrame — first-class
-library API (SQL twins in __spark_entry__ carry the DuckDB oracle;
-tests assert row-for-row equality). All pure column expressions.
+library API; the ``__spark_entry__`` queries call these functions and
+their DuckDB oracles check them row for row. All pure column
+expressions.
 
 * quality scoring — token counts, average token length, stopword and
   distinct-token ratios (the boilerplate/quality features a training
@@ -23,9 +24,11 @@ STOPWORDS = {
 
 
 def _tokens(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
-    return df.withColumn(
-        "_t", F.filter(F.split(F.col(text_col), " "), lambda x: x != "")
-    ).withColumn("_doc_id", F.col(id_col).cast("string"))
+    # SQL text: each Column call is a py4j round trip at plan construction
+    return df.withColumns({
+        "_t": F.expr(f"filter(split(`{text_col}`, ' '), x -> x <> '')"),
+        "_doc_id": F.expr(f"CAST(`{id_col}` AS STRING)"),
+    })
 
 
 def quality_features(
@@ -40,22 +43,16 @@ def quality_features(
     upstream stage without a stream self-join)."""
     if lang_col not in df.columns:
         df = df.withColumn(lang_col, F.lit(None).cast("string"))
-    toks = _tokens(df, id_col, text_col)
-    stop = F.size(
-        F.filter(F.col("_t"), lambda x: (x == "the") | (x == "a"))
-    )
-    return toks.select(
-        F.col("_doc_id").alias("doc_id"),
-        F.col(lang_col).alias("lang"),
-        F.size("_t").alias("n_tokens"),
-        F.round(
-            F.length(F.regexp_replace(text_col, " ", "")) / F.size("_t"), 4
-        ).alias("avg_token_len"),
-        F.round(stop / F.size("_t"), 4).alias("stopword_ratio"),
-        F.round(F.size(F.array_distinct("_t")) / F.size("_t"), 4).alias(
-            "distinct_ratio"
-        ),
-        *[F.col(c) for c in extra_cols],
+    return _tokens(df, id_col, text_col).selectExpr(
+        "_doc_id AS doc_id",
+        f"`{lang_col}` AS lang",
+        "size(_t) AS n_tokens",
+        f"round(length(regexp_replace(`{text_col}`, ' ', '')) / size(_t), 4)"
+        " AS avg_token_len",
+        "round(size(filter(_t, x -> x = 'the' OR x = 'a')) / size(_t), 4)"
+        " AS stopword_ratio",
+        "round(size(array_distinct(_t)) / size(_t), 4) AS distinct_ratio",
+        *[f"`{c}`" for c in extra_cols],
     )
 
 
@@ -65,28 +62,20 @@ def language_id(
 ) -> DataFrame:
     """Stopword-count argmax per doc (deterministic tie-break by the
     fixed language order en/de/fr/es)."""
-    toks = _tokens(df, id_col, text_col)
-
-    def _matcher(words):
-        # single-arg lambda (pyspark passes (element, index) to 2-arg ones)
-        return lambda x: (x == words[0]) | (x == words[1]) | (x == words[2])
-
-    counts = {
-        lang: F.size(F.filter(F.col("_t"), _matcher(words))).alias(f"c_{lang}")
+    counts = [
+        "size(filter(_t, x -> "
+        + " OR ".join(f"x = '{w}'" for w in words)
+        + f")) AS c_{lang}"
         for lang, words in STOPWORDS.items()
-    }
-    with_counts = toks.select(
-        F.col("_doc_id").alias("doc_id"),
-        F.col(lang_col).alias("true_lang"),
-        *counts.values(),
-    )
-    best = F.greatest(*[F.col(f"c_{lang}") for lang in STOPWORDS])
-    predicted = F.when(F.col("c_en") == best, "en")
-    for lang in ("de", "fr"):
-        predicted = predicted.when(F.col(f"c_{lang}") == best, lang)
-    predicted = predicted.otherwise("es")
-    return with_counts.select(
-        "doc_id", "true_lang", predicted.alias("predicted_lang"),
+    ]
+    return _tokens(df, id_col, text_col).selectExpr(
+        "_doc_id AS doc_id", f"`{lang_col}` AS true_lang", *counts
+    ).selectExpr(
+        "doc_id",
+        "true_lang",
+        "CASE greatest(c_en, c_de, c_fr, c_es) WHEN c_en THEN 'en'"
+        " WHEN c_de THEN 'de' WHEN c_fr THEN 'fr' ELSE 'es' END"
+        " AS predicted_lang",
         "c_en", "c_de", "c_fr", "c_es",
     )
 
@@ -189,7 +178,7 @@ def chunk_documents(
     document end; a doc of ≤ max_tokens tokens yields exactly one
     chunk and an empty doc yields none. Chunk count uses pure integer
     arithmetic (1 + (n − overlap − 1) div stride for n > max_tokens) so
-    the SQL twin is bit-exact.
+    the DuckDB oracle is bit-exact.
 
     Scale shape: pure higher-order column expressions (sequence →
     explode → slice/array_join) — whole-stage codegen, zero shuffle,

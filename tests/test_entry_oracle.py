@@ -1,6 +1,8 @@
 """Replicates the driver's correctness gate locally: run every
 queries() entry on Spark and its oracle_sql() on DuckDB at sf0.001 and
-compare row count, column names, and order-insensitive values."""
+compare row count, column names, and order-insensitive values.
+scripts/oracle_sweep.py runs the same compare, with exact float repr,
+at any scale factor."""
 
 import math
 
@@ -12,13 +14,14 @@ import __spark_entry__ as entry_mod
 SF_DIR = "/root/testdata/sf0.001"
 
 
-def _duck(sql: str):
+def duck_connect(sf_dir: str = SF_DIR):
+    """A DuckDB connection with a view over ``sf_dir`` per ``TABLES`` entry."""
     con = duckdb.connect()
     for t in entry_mod.TABLES:
         con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM '{SF_DIR}/{t}.parquet'"
+            f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'"
         )
-    return con.execute(sql).fetch_df()
+    return con
 
 
 def _norm_cell(v):
@@ -33,30 +36,25 @@ def _norm_cell(v):
     return str(v)
 
 
-def _norm_rows(cols, rows):
+def _norm_rows(cols, rows, norm_cell=_norm_cell):
     cols = list(cols)
     order = sorted(range(len(cols)), key=lambda i: cols[i])
     out = sorted(
-        tuple(_norm_cell(r[i]) for i in order) for r in rows
+        tuple(norm_cell(r[i]) for i in order) for r in rows
     )
     return sorted(cols), out
 
 
-QUERY_NAMES = sorted(set(entry_mod.oracle_sql()) & set(entry_mod.queries()))
-
-
-@pytest.mark.parametrize("name", QUERY_NAMES)
-def test_query_matches_oracle(spark, name):
-    q = entry_mod.queries()[name]
-    sdf = q(spark, SF_DIR)
+def mismatch(name, sdf, ddf, norm_cell=_norm_cell):
+    """Why the Spark result ``sdf`` differs from the DuckDB result
+    ``ddf`` (a pandas frame) under ``norm_cell``, or None if it does not."""
     srows = [tuple(r) for r in sdf.collect()]
     scols = sdf.columns
-
-    ddf = _duck(entry_mod.oracle_sql()[name])
     drows = [tuple(r) for r in ddf.itertuples(index=False)]
     dcols = list(ddf.columns)
 
-    assert len(srows) == len(drows), f"{name}: row count {len(srows)} != {len(drows)}"
+    if len(srows) != len(drows):
+        return f"{name}: row count {len(srows)} != {len(drows)}"
 
     # dtype-kind parity: a DuckDB HUGEINT (sum of INTEGER) surfaces as
     # float64 in pandas and hash-mismatches the driver even when values
@@ -68,19 +66,34 @@ def test_query_matches_oracle(spark, name):
         sk = spark_types.get(c, "?")
         s_int = sk in ("bigint", "int", "smallint", "tinyint")
         s_float = sk in ("double", "float")
-        assert not (dk == "f" and s_int) and not (dk == "i" and s_float), (
-            f"{name}.{c}: spark dtype {sk} vs duckdb pandas kind {dk} — "
-            f"add an explicit CAST in the oracle SQL"
-        )
+        if (dk == "f" and s_int) or (dk == "i" and s_float):
+            return (
+                f"{name}.{c}: spark dtype {sk} vs duckdb pandas kind {dk} — "
+                f"add an explicit CAST in the oracle SQL"
+            )
 
-    s_cols, s_norm = _norm_rows(scols, srows)
-    d_cols, d_norm = _norm_rows(dcols, drows)
-    assert s_cols == d_cols, f"{name}: columns {s_cols} != {d_cols}"
+    s_cols, s_norm = _norm_rows(scols, srows, norm_cell)
+    d_cols, d_norm = _norm_rows(dcols, drows, norm_cell)
+    if s_cols != d_cols:
+        return f"{name}: columns {s_cols} != {d_cols}"
     mism = [i for i, (a, b) in enumerate(zip(s_norm, d_norm)) if a != b]
-    assert not mism, (
-        f"{name}: {len(mism)} mismatched rows; first: "
-        f"{s_norm[mism[0]]} != {d_norm[mism[0]]}"
-    )
+    if mism:
+        return (
+            f"{name}: {len(mism)} mismatched rows; first: "
+            f"{s_norm[mism[0]]} != {d_norm[mism[0]]}"
+        )
+    return None
+
+
+QUERY_NAMES = sorted(set(entry_mod.oracle_sql()) & set(entry_mod.queries()))
+
+
+@pytest.mark.parametrize("name", QUERY_NAMES)
+def test_query_matches_oracle(spark, name):
+    sdf = entry_mod.queries()[name](spark, SF_DIR)
+    ddf = duck_connect().execute(entry_mod.oracle_sql()[name]).fetch_df()
+    msg = mismatch(name, sdf, ddf)
+    assert msg is None, msg
 
 
 def test_entry_smoke(spark):
